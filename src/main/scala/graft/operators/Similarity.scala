@@ -2,9 +2,12 @@ package graft.operators
 
 import graft.Tables
 import graft.functions.PortableHash
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (dim-64 float vectors) — north-star similarity-search surface.
@@ -327,6 +330,23 @@ object Similarity {
     model
   }
 
+  /** Local properties a job forked onto a pool thread keeps from its caller. */
+  private val CallerProps = Seq("spark.jobGroup.id", "spark.job.description",
+    "spark.job.interruptOnCancel", "spark.job.tags", "spark.scheduler.pool")
+
+  /** `f` on a pool thread, under the calling thread's job group,
+    * description, tags and scheduler pool. A pool thread otherwise
+    * carries the local properties of whichever thread created it, so
+    * its jobs would escape the caller's group (and its cancellation). */
+  private[operators] def forkWithCallerProps[T](sc: SparkContext)(f: => T): Future[T] = {
+    val props = CallerProps.map(k => k -> sc.getLocalProperty(k))
+    Future {
+      val saved = CallerProps.map(k => k -> sc.getLocalProperty(k))
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try f finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }(ExecutionContext.global)
+  }
+
   /** Library entry: IVF-PQ ANN over any (vec_id, embedding) — the
     * missing 100 TB retrieval component x12/x25 don't cover. The index
     * row is (vec_id, coarse cell, m one-byte-sized codes): candidates
@@ -349,8 +369,8 @@ object Similarity {
     // (guide §2.6): the scheduler interleaves their small stages and
     // the wall cost is max(coarse, pq) instead of the sum. Both models
     // are pure functions of their input — results are unchanged.
-    val coarseF = scala.concurrent.Future(trainCentroids(e, lloydIters))(
-      scala.concurrent.ExecutionContext.global)
+    val coarseF = forkWithCallerProps(e.sparkSession.sparkContext)(
+      trainCentroids(e, lloydIters))
     val un0 = e.select(col("vec_id"), col("v"), col("nrm"),
       expr("transform(v, x -> x / nrm)").as("u"))
     // optional OPQ dimension permutation (x78): u reordered BEFORE
@@ -361,9 +381,14 @@ object Similarity {
       un0.withColumn("u",
         array(p.toSeq.map(d => element_at(col("u"), d + 1)): _*))
     }
-    val pq = trainPq(un.select(col("vec_id"), col("u")), PqIters)
-    val coarse = scala.concurrent.Await.result(
-      coarseF, scala.concurrent.duration.Duration.Inf)
+    val pq = try trainPq(un.select(col("vec_id"), col("u")), PqIters)
+      catch {
+        case t: Throwable =>
+          // no orphan: the coarse ladder must not outlive this call
+          Await.ready(coarseF, Duration.Inf)
+          throw t
+      }
+    val coarse = Await.result(coarseF, Duration.Inf)
     val index = un.select(col("vec_id"),
       element_at(graft.functions.CentroidTopCids(
         col("v"), col("nrm"), coarse, NProbe), 1).as("cid"),

@@ -5,9 +5,10 @@ import java.io.ByteArrayOutputStream
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
+import org.apache.avro.util.Utf8
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
@@ -90,9 +91,11 @@ object AvroWire {
   }
 }
 
-/** struct -> avro-encoded binary (CodegenFallback: I/O boundary, not a
-  * hot analytical path). With `confluentId` set, the body is prefixed
-  * by the 5-byte registry header (magic 0x00 + int32 BE schema id). */
+/** struct -> avro-encoded binary. With `confluentId` set, the body is
+  * prefixed by the 5-byte registry header (magic 0x00 + int32 BE schema
+  * id). Runs on the producer side only (framing a transcript or a
+  * stream into the topic); see [[AvroDecode]] for why both stay
+  * `CodegenFallback`. */
 case class AvroEncode(child: Expression, schemaJson: String,
     confluentId: Option[Int])
     extends UnaryExpression with CodegenFallback {
@@ -137,45 +140,65 @@ case class AvroEncode(child: Expression, schemaJson: String,
     copy(child = c)
 }
 
-/** avro binary -> struct. With `confluentId` set, expects and strips
-  * the 5-byte registry header, validating magic and schema id. */
+/** avro binary -> struct. With `confluentId` set, expects and skips
+  * the 5-byte registry header, validating magic and schema id.
+  *
+  * This is the detector's per-record path: every consumed record is
+  * decoded twice (key and value). So the struct type and its field
+  * types are computed once per expression, the body is decoded in place
+  * (no copy to strip the header), strings become `UTF8String` straight
+  * from the Avro `Utf8` bytes, and the row is filled without boxing
+  * through collections. It stays `CodegenFallback` because the work is
+  * inside Avro's `GenericDatumReader`, which generated code could only
+  * call through the same way; the generated projection invokes `eval`
+  * directly. The record and its `Utf8`s are fresh per row (the reader
+  * gets no reuse object), because the returned row keeps their bytes.
+  */
 case class AvroDecode(child: Expression, schemaJson: String,
     confluentId: Option[Int])
     extends UnaryExpression with CodegenFallback {
 
-  override def dataType: DataType = AvroWire.structFor(schemaJson)
+  override lazy val dataType: DataType = AvroWire.structFor(schemaJson)
 
   @transient private lazy val schema = new Schema.Parser().parse(schemaJson)
   @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
+  @transient private lazy val fieldTypes: Array[DataType] =
+    dataType.asInstanceOf[StructType].fields.map(_.dataType)
 
   override def nullSafeEval(input: Any): Any = {
     val raw = input.asInstanceOf[Array[Byte]]
-    val bytes = confluentId match {
-      case None => raw
+    val off = confluentId match {
+      case None => 0
       case Some(expected) =>
         require(raw.length >= 5 && raw(0) == 0,
           s"not Confluent-framed: ${raw.take(5).mkString("[", ",", "]")}")
         val id = ((raw(1) & 0xff) << 24) | ((raw(2) & 0xff) << 16) |
           ((raw(3) & 0xff) << 8) | (raw(4) & 0xff)
         require(id == expected, s"schema id $id, expected $expected")
-        java.util.Arrays.copyOfRange(raw, 5, raw.length)
+        5
     }
-    val dec: BinaryDecoder = DecoderFactory.get().binaryDecoder(bytes, null)
+    val dec: BinaryDecoder =
+      DecoderFactory.get().binaryDecoder(raw, off, raw.length - off, null)
     val rec = reader.read(null, dec)
-    val st = dataType.asInstanceOf[StructType]
-    val values = st.fields.zipWithIndex.map { case (f, i) =>
+    val types = fieldTypes
+    val values = new Array[Any](types.length)
+    var i = 0
+    while (i < types.length) {
       val v = rec.get(i)
-      if (v == null) null
-      else f.dataType match {
-        case StringType => UTF8String.fromString(v.toString)
+      if (v != null) values(i) = types(i) match {
+        case StringType => v match {
+          case u: Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+          case other => UTF8String.fromString(other.toString)
+        }
         case LongType | IntegerType | DoubleType | BooleanType => v
         case BinaryType =>
           val bb = v.asInstanceOf[java.nio.ByteBuffer]
           val arr = new Array[Byte](bb.remaining()); bb.get(arr); arr
         case t => throw new IllegalArgumentException(s"unsupported $t")
       }
+      i += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   override protected def withNewChildInternal(c: Expression): Expression =

@@ -26,11 +26,14 @@ import org.apache.hadoop.fs.permission.FsPermission
   * [[NioRawLocalFileSystem]] replaces the shell chmod with one
   * `java.nio.file.Files.setPosixFilePermissions` call — same on-disk
   * result, no process. On a filesystem without POSIX views it falls
-  * back to the parent's behavior.
+  * back to the parent's behavior, and so does a mode carrying a
+  * setuid, setgid or sticky bit, which java.nio cannot set.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    try {
+    if ((permission.toShort & NioLocalFs.SpecialBits) != 0)
+      super.setPermission(p, permission) // setuid/setgid/sticky: no nio form
+    else try {
       java.nio.file.Files.setPosixFilePermissions(
         pathToFile(p).toPath, NioLocalFs.posixOf(permission.toShort))
     } catch {
@@ -39,6 +42,10 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
 }
 
 object NioLocalFs {
+  /** setuid (0x800), setgid (0x400) and sticky (0x200): bits that
+    * `PosixFilePermission` cannot express. */
+  val SpecialBits = 0xE00
+
   private val Bits: Seq[(Int, PosixFilePermission)] = Seq(
     0x100 -> OWNER_READ, 0x80 -> OWNER_WRITE, 0x40 -> OWNER_EXECUTE,
     0x20 -> GROUP_READ, 0x10 -> GROUP_WRITE, 0x8 -> GROUP_EXECUTE,

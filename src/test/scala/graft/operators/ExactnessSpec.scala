@@ -147,6 +147,29 @@ class ExactnessSpec extends SparkSpec {
     info(f"per-dim energy max/min ratio: ${en.max.toDouble / en.min}%.3f")
   }
 
+  test("forked ANN training runs under the caller's job group, description and pool") {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.jobGroup.id", "spark.job.description", "spark.scheduler.pool")
+    // occupy the shared pool's threads first, so the fork below cannot
+    // inherit the properties by creating a fresh thread
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    Await.result(Future.sequence((1 to 8).map(_ => Future(Thread.sleep(10)))), 30.seconds)
+    sc.setJobGroup("ann-train", "train coarse quantizer", interruptOnCancel = false)
+    sc.setLocalProperty("spark.scheduler.pool", "ann")
+    try {
+      val (seen, n) = Await.result(Similarity.forkWithCallerProps(sc) {
+        (keys.map(sc.getLocalProperty), spark.range(10).count())
+      }, 60.seconds)
+      assert(seen == Seq("ann-train", "train coarse quantizer", "ann"))
+      assert(n == 10L)
+    } finally {
+      sc.clearJobGroup()
+      sc.setLocalProperty("spark.scheduler.pool", null)
+    }
+  }
+
   test("x05 banded pairs are a subset of exact pairs; recall reported") {
     val emb = graft.Tables.embeddings(spark, sf)
     def pairs(df: org.apache.spark.sql.DataFrame) =

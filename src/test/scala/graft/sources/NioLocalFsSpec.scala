@@ -60,6 +60,26 @@ class NioLocalFsSpec extends AnyFunSuite {
     }
   }
 
+  test("a sticky-bit mode reaches the directory like stock Hadoop's chmod") {
+    val fs = FileSystem.get(java.net.URI.create("file:///"), newConf())
+    val dir = Files.createTempDirectory("nio_fs_special_").toFile
+    def mode(f: java.io.File): Int =
+      Files.getAttribute(f.toPath, "unix:mode").asInstanceOf[Integer] & 0xfff
+    try {
+      val d = new java.io.File(dir, "shared")
+      assert(d.mkdir())
+      // FsPermission carries the sticky bit (0x200) in toShort; the nio
+      // permission set cannot, so such a mode takes the parent's path
+      for (m <- Seq("1777", "1750", "0750")) {
+        val want = Integer.parseInt(m, 8)
+        fs.setPermission(new Path(d.getAbsolutePath), new FsPermission(want.toShort))
+        assert(mode(d) == want, s"mode ${Integer.toOctalString(mode(d))}, expected $m")
+      }
+    } finally {
+      Option(dir.listFiles()).foreach(_.foreach(_.delete())); dir.delete()
+    }
+  }
+
   test("write skips .crc sidecars by default; read-back is intact") {
     val fs = FileSystem.get(java.net.URI.create("file:///"), newConf())
     val dir = Files.createTempDirectory("nio_fs_crc_").toFile

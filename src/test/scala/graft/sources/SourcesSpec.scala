@@ -99,17 +99,56 @@ class SourcesSpec extends SparkSpec {
       """{"type": "record", "name": "Opt", "fields": [
         |  {"name": "id", "type": "string"},
         |  {"name": "note", "type": ["null", "string"]},
-        |  {"name": "n", "type": ["null", "long"]}
+        |  {"name": "n", "type": ["null", "long"]},
+        |  {"name": "ok", "type": ["null", "boolean"]}
         |]}""".stripMargin
-    val df = Seq(("a", Some("hi"), Some(7L)), ("b", None, None))
-      .toDF("id", "note", "n")
-    val back = df.select(AvroWire.fromAvro(
-        AvroWire.toAvro(struct(col("id"), col("note"), col("n")), schema),
-        schema).as("r"))
-      .select("r.id", "r.note", "r.n")
-      .collect().map(r => (r.getString(0), Option(r.getString(1)),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)))).toSet
-    assert(back == Set(("a", Some("hi"), Some(7L)), ("b", None, None)))
+    val rows = Seq(("a", Some("hi"), Some(7L), Some(true)), ("b", None, None, None),
+      ("c", Some("ça"), None, Some(false)), ("", Some(""), Some(-1L), None))
+    val df = rows.toDF("id", "note", "n", "ok")
+    val in = struct(col("id"), col("note"), col("n"), col("ok"))
+    // bare body and Confluent-framed body decode through the same path
+    for (framed <- Seq(
+        AvroWire.fromAvro(AvroWire.toAvro(in, schema), schema),
+        AvroWire.fromAvroConfluent(AvroWire.toAvroConfluent(in, schema, 9), schema, 9))) {
+      val back = df.select(framed.as("r"))
+        .select("r.id", "r.note", "r.n", "r.ok")
+        .collect().map(r => (r.getString(0), Option(r.getString(1)),
+          if (r.isNullAt(2)) None else Some(r.getLong(2)),
+          if (r.isNullAt(3)) None else Some(r.getBoolean(3)))).toSet
+      assert(back == rows.toSet)
+    }
+  }
+
+  test("multi-byte UTF-8 and empty strings roundtrip through confluent framing") {
+    import spark.implicits._
+    val in = Seq(
+      MessageStatus("ü-日本-\uD83D\uDE00", "", 12125551234L, "t\u2011mobile \u2713", 1L),
+      MessageStatus("", "sent", 0L, "", -1L),
+      MessageStatus("m-1", "délivré", Long.MaxValue, "att", Long.MinValue))
+    val back = KafkaIO.unframeConfluent(KafkaIO.frameConfluent(in.toDS()))
+      .collect().toSet
+    assert(back == in.toSet)
+  }
+
+  test("AvroDecode computes its struct type once, not per row") {
+    val e = AvroDecode(org.apache.spark.sql.catalyst.expressions.Literal(Array[Byte]()),
+      AvroWire.MessageStatusSchema, Some(2))
+    assert(e.dataType eq e.dataType)
+    assert(e.dataType == AvroWire.structFor(AvroWire.MessageStatusSchema))
+  }
+
+  test("a truncated Avro body or header still throws") {
+    import spark.implicits._
+    val framed = KafkaIO.frameConfluent(
+      Seq(MessageStatus("m-1", "sent", 12125551234L, "att", 1700000000000L)).toDS())
+      .select("value").head().getAs[Array[Byte]](0)
+    def decode(b: Array[Byte]) = Seq(b).toDF("value").select(
+      AvroWire.fromAvroConfluent(org.apache.spark.sql.functions.col("value"),
+        AvroWire.MessageStatusSchema, KafkaIO.ValueSchemaId).as("v")).collect()
+    intercept[Exception](decode(framed.dropRight(3)))
+    val ex = intercept[Exception](decode(framed.take(3)))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("not Confluent-framed")))
   }
 
   test("framed produce->consume roundtrip through a live DSv2 transport") {
