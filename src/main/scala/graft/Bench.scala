@@ -96,6 +96,11 @@ object Bench {
       // s11 3.57→3.22 s, others ≤ noise. The FileSystem-API default
       // (LocalFileSystem) must stay: RocksDBFileManager hard-casts
       // FileSystem.getLocal to LocalFileSystem (zip/copyFromLocalFile).
+      // GraftRawLocalFs is also fork-free on the checkpoint path: every
+      // checkpoint file is a temp file renamed into place, and stock
+      // Hadoop asks the link status of both rename sides with a shell
+      // `readlink` (about 20 forks of this JVM per detector
+      // micro-batch; see graft.sources.NioLocalFs).
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS",
           "graft.sources.GraftRawLocalFs"))
@@ -109,7 +114,8 @@ object Bench {
       .config("spark.hadoop.fs.file.impl",
         sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
           "graft.sources.GraftLocalFileSystem"))
-      // Shuffle/spill scratch on tmpfs (see TempDirs.sparkLocalDir):
+      // Shuffle/spill scratch in a per-process tmpfs dir when tmpfs has
+      // room (see TempDirs.sparkLocalDir):
       // jstack'd replay benches spent most RUNNABLE executor samples in
       // BypassMergeSortShuffleWriter file writes+concat against the
       // default /tmp disk. SPARK_GRAFT_LOCAL_DIR overrides for A/B.

@@ -18,22 +18,41 @@ private[graft] object TempDirs {
     dir
   }
 
+  /** Below this much usable space on `/dev/shm`, Spark's scratch
+    * goes to the JVM temp dir instead: tmpfs is RAM, and spills happen
+    * exactly when memory is short. */
+  val MinShmUsableBytes: Long = 2L << 30
+
+  /** Where the per-process scratch dir goes: `shm` when it is a
+    * writable directory with at least [[MinShmUsableBytes]] free, else
+    * `java.io.tmpdir`. */
+  private[graft] def scratchRoot(shm: java.io.File): java.io.File =
+    if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= MinShmUsableBytes) shm
+    else new java.io.File(System.getProperty("java.io.tmpdir"))
+
+  /** A new directory under `root`, named for this process and removed
+    * at JVM exit. */
+  private[graft] def processDir(root: java.io.File): java.io.File =
+    deleteOnExit(java.nio.file.Files.createTempDirectory(root.toPath,
+      s"graft-local-${ProcessHandle.current.pid}-").toFile)
+
+  private lazy val processLocalDir: String =
+    processDir(scratchRoot(new java.io.File("/dev/shm"))).getAbsolutePath
+
   /** Scratch root for `spark.local.dir` (shuffle files, spills, block
-    * manager): tmpfs when the host has one, else the JVM temp dir —
-    * the same host-shortcut rationale as the replays' scratch
-    * checkpoints. The r15 jstack profile of the replay bench showed
-    * RUNNABLE executor threads concentrated in
-    * BypassMergeSortShuffleWriter's per-partition file writes +
-    * concatenation on the default /tmp (a virtualized, co-tenant-
-    * contended disk); shuffle data here is transient by definition and
-    * never needs to survive the app. Production clusters point
+    * manager): a per-process directory on tmpfs when the host has one
+    * with room to spare, else under the JVM temp dir — the same
+    * host-shortcut rationale as the replays' scratch checkpoints. The
+    * r15 jstack profile of the replay bench showed RUNNABLE executor
+    * threads concentrated in BypassMergeSortShuffleWriter's
+    * per-partition file writes + concatenation on the default /tmp (a
+    * virtualized, co-tenant-contended disk); shuffle data here is
+    * transient by definition and never needs to survive the app, and
+    * the directory is deleted at exit so it never pins RAM past the
+    * run (a killed JVM still leaves it). Production clusters point
     * spark.local.dir at their fast local devices — this picks this
     * box's. SPARK_GRAFT_LOCAL_DIR overrides (e.g. back to /tmp for
     * A/B). */
   def sparkLocalDir(): String =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm"
-      else System.getProperty("java.io.tmpdir")
-    })
+    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", processLocalDir)
 }

@@ -5,7 +5,7 @@ import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** Local filesystems whose permission operations run in-process.
@@ -28,8 +28,26 @@ import org.apache.hadoop.fs.permission.FsPermission
   * result, no process. On a filesystem without POSIX views it falls
   * back to the parent's behavior, and so does a mode carrying a
   * setuid, setgid or sticky bit, which java.nio cannot set.
+  *
+  * The second fork is `readlink`, once per rename side. Every
+  * checkpoint file Spark writes (offsets, commits, each state
+  * `.delta`, and since Spark 4.1 the `.crc` of each) is a temp file
+  * renamed into place through `FileContext`, and
+  * `AbstractFileSystem.renameInternal` asks `getFileLinkStatus` of
+  * the source and the destination. Without libhadoop the parent
+  * answers with `FileUtil.readLink`, a shell `readlink` — about 20
+  * forks per detector micro-batch, each handed the qualified
+  * `file:/...` string, which `readlink` never resolves, so the target
+  * always comes back empty. `getFileLinkStatus` here asks java.nio
+  * first: a path that is not a symlink gets `getFileStatus`, which is
+  * what the parent returns for it; a symlink still takes the parent's
+  * path.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
+  override def getFileLinkStatus(f: Path): FileStatus =
+    if (java.nio.file.Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    else getFileStatus(f)
+
   override def setPermission(p: Path, permission: FsPermission): Unit =
     if ((permission.toShort & NioLocalFs.SpecialBits) != 0)
       super.setPermission(p, permission) // setuid/setgid/sticky: no nio form
@@ -69,13 +87,11 @@ object NioLocalFs {
   * (RawLocalFs for checkpoint WALs); this closes the FileSystem-API
   * half without losing the LocalFileSystem type. Reads still verify
   * against any `.crc` that exists (verifyChecksum stays on), so
-  * pre-existing checksummed data keeps its integrity check.
-  * SPARK_GRAFT_LOCAL_CRC=1 restores sidecar writing for A/B. */
+  * pre-existing checksummed data keeps its integrity check. */
 class GraftLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem) {
   override def initialize(uri: URI, conf: Configuration): Unit = {
     super.initialize(uri, conf)
-    if (sys.env.getOrElse("SPARK_GRAFT_LOCAL_CRC", "0") != "1")
-      setWriteChecksum(false)
+    setWriteChecksum(false)
   }
 }
 

@@ -140,13 +140,13 @@ object ReplayPhases {
     }
     val schema = spark.read.parquet(dir.getAbsolutePath).schema
     def noop(stateful: Boolean): Double = {
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set(
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+      val confs = Seq(
+        "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val ckpt = java.nio.file.Files.createTempDirectory(
           new java.io.File("/dev/shm").toPath, "graft_noop_ck_").toFile
@@ -168,9 +168,9 @@ object ReplayPhases {
         }
         rm(ckpt)
         w
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
     }
     noop(stateful = false) // warm the streaming machinery path
