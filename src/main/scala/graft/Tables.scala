@@ -67,13 +67,9 @@ object Tables {
             java.nio.file.Files.createTempDirectory("graft_events_norm_")
               .toFile)
           val out = new java.io.File(dir, "events").getAbsolutePath
-          val prev = s.conf.getOption(NanosKey)
-          s.conf.set(NanosKey, "true")
-          try normalizeEventTs(s.read.parquet(raw))
-            .write.mode("overwrite").parquet(out)
-          finally prev match {
-            case Some(v) => s.conf.set(NanosKey, v)
-            case None => s.conf.unset(NanosKey)
+          operators.Sessions.withConfs(s, NanosKey -> "true") {
+            normalizeEventTs(s.read.parquet(raw))
+              .write.mode("overwrite").parquet(out)
           }
           out
         }

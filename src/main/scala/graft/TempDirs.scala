@@ -36,8 +36,23 @@ private[graft] object TempDirs {
     deleteOnExit(java.nio.file.Files.createTempDirectory(root.toPath,
       s"graft-local-${ProcessHandle.current.pid}-").toFile)
 
+  private val Shm = new java.io.File("/dev/shm")
+
   private lazy val processLocalDir: String =
-    processDir(scratchRoot(new java.io.File("/dev/shm"))).getAbsolutePath
+    processDir(scratchRoot(Shm)).getAbsolutePath
+
+  /** A new scratch directory under [[scratchRoot]]: tmpfs when the host
+    * has room, else the JVM temp dir. The streaming replays run to
+    * completion and discard everything they write, so durability buys
+    * nothing and tmpfs takes the I/O off disk (measured ~40% off the
+    * outer-join replay for the checkpoint alone; the upsert/sketch-table
+    * replays also read+rewrite their bucketed state through it every
+    * micro-batch). Production deployments choose durable
+    * checkpointLocation / state URIs — this shortcut is the HARNESS's,
+    * shared by the checkpoint, replay-state, replay-fixture and
+    * replay-output paths. */
+  def scratchDir(prefix: String): java.io.File =
+    java.nio.file.Files.createTempDirectory(scratchRoot(Shm).toPath, prefix).toFile
 
   /** Scratch root for `spark.local.dir` (shuffle files, spills, block
     * manager): a per-process directory on tmpfs when the host has one

@@ -2,9 +2,27 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Cloned-session helper for conf-window operators (q35's bloom pins,
-  * q36's AQE skew pins). */
+/** Conf windows: the cloned-session helper for conf-window operators
+  * (q35's bloom pins, q36's AQE skew pins), and [[withConfs]] for
+  * windows set on the caller's own session (the streaming replays, the
+  * events-fixture normalization). */
 object Sessions {
+
+  /** Run `f` with each `key -> value` set on `s`, then put every key
+    * back as it was on EVERY exit, a throw from `f` included: a key
+    * that was set gets its prior value, a key that was not set is
+    * unset again (so it reads its default, not a pinned copy of it). */
+  private[graft] def withConfs[T](s: SparkSession, kv: (String, String)*)(f: => T): T = {
+    val set = s.conf.getAll
+    val prev = kv.map { case (k, _) => k -> set.get(k) }
+    try {
+      kv.foreach { case (k, v) => s.conf.set(k, v) }
+      f
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 
   /** `s.newSession()` plus the parent's RUNTIME SQLConf deltas.
     *

@@ -531,7 +531,7 @@ object Similarity {
   }
 
   /** Diagnostic: the OPQ-permuted ADC ranking WITHOUT re-rank (the
-    * x70 twin under the permutation) — used by OpqProbe/ExactnessSpec
+    * x70 twin under the permutation) — used by ExactnessSpec
     * to isolate what the permutation buys at the ADC tier. */
   private[graft] def annIvfPqOpq(emb: DataFrame, queryIds: Seq[Long],
       lloydIters: Int = LloydIters): DataFrame = {

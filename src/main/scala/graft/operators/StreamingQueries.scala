@@ -1,8 +1,15 @@
 package graft.operators
 
+import graft.TempDirs
 import graft.streaming._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.StructType
 
 /** Streaming operators exposed through the driver contract by REPLAYING
   * the events fixture through real Structured Streaming machinery:
@@ -29,20 +36,25 @@ object StreamingQueries {
     * normalization as [[graft.Tables.events]] — both ride
     * [[graft.Tables.eventsPath]], so no session conf is mutated here
     * and the batch/streaming paths cannot drift in encoding. No driver
-    * collect — rows stream through executors.
-    *
-    * The source reads the cached multi-file split of the fixture
-    * ([[eventsSplitDir]]) rather than the raw single-file layout:
-    * parquet row groups are larger than the fixture, so a one-file
-    * source pins the whole data batch's scan+shuffle-write on ONE core
-    * — with no trigger cap all split files still arrive in the same
-    * micro-batch (identical rows, identical batching, the scan is just
-    * N tasks wide). */
-  private def eventsStream(s: SparkSession, d: String): Dataset[MessageStatus] = {
-    val dir = eventsSplitDir(s, d, 8)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    messageStatusOf(s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
+    * collect — rows stream through executors. */
+  private def eventsStream(s: SparkSession, d: String): Dataset[MessageStatus] =
+    messageStatusOf(rawEventsStream(s, d))
+
+  /** The raw events rows as a stream, read from the cached multi-file
+    * split of the fixture ([[eventsSplitDir]]) rather than the raw
+    * single-file layout: parquet row groups are larger than the fixture,
+    * so a one-file source pins the whole data batch's scan+shuffle-write
+    * on ONE core — with no trigger cap all split files still arrive in
+    * the same micro-batch (identical rows, identical batching, the scan
+    * is just N tasks wide). */
+  private def rawEventsStream(s: SparkSession, d: String): DataFrame = {
+    val path = eventsSplitDir(s, d, 8).getAbsolutePath
+    s.readStream.schema(s.read.parquet(path).schema).parquet(path)
   }
+
+  /** [[eventsStream]] followed by the two sentinel micro-batches. */
+  private def replayEvents(s: SparkSession, d: String): Dataset[MessageStatus] =
+    eventsStream(s, d).unionByName(sentinelStream(s))
 
   /** The events→MessageStatus mapping, shared by every replay source
     * (single-file, and s10's multi-file split) so the projection cannot
@@ -59,6 +71,8 @@ object StreamingQueries {
       .as[MessageStatus]
   }
 
+  private lazy val MessageStatusSchema = Encoders.product[MessageStatus].schema
+
   /** Sentinel timestamps: fixed instants far past any fixture event
     * (2100-01-01 and +1d). Constants — not a max(ts) scan — because the
     * only requirement is "after every deadline/window end", and fixture
@@ -67,117 +81,86 @@ object StreamingQueries {
   private[operators] val Sentinel1Ms = 4102444800000L
   private[operators] val Sentinel2Ms = Sentinel1Ms + 86400000L
 
-  /** Write each sentinel row as its own one-row parquet file in a fresh
-    * temp dir (ascending mtimes), so a maxFilesPerTrigger=1 file source
-    * delivers them as consecutive micro-batches AFTER the fixture: the
-    * first advances the watermark past every deadline/window, the second
-    * is the data batch in which the timers/eviction fire. One write job
-    * for all rows (range-partitioned on the distinct timestamps). */
-  private def sentinelDir(s: SparkSession, rows: Seq[MessageStatus]): java.io.File = {
+  /** The sentinel rows as two one-row micro-batches to replay AFTER the
+    * fixture: the first advances the watermark past every
+    * deadline/window, the second is the data batch in which the
+    * timers/eviction fire. The rows are constants, so one fixture per
+    * application serves every replay (s01 + s02, and every bench
+    * iteration) instead of a write job each. */
+  private def sentinelStream(s: SparkSession): Dataset[MessageStatus] = {
     import s.implicits._
-    val dir = scratchDir("graft_sentinel_")
-    val stage = new java.io.File(dir, "stage")
-    rows.toDS().repartitionByRange(rows.size, col("timestamp"))
-      .write.parquet(stage.getAbsolutePath)
-    val parts = stage.listFiles().filter(_.getName.endsWith(".parquet"))
-      .sortBy(_.getName) // part-00000 < part-00001 = range order
-    parts.zipWithIndex.foreach { case (part, i) =>
-      val dest = new java.io.File(dir, f"sentinel_$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dest.toPath)
-      dest.setLastModified(System.currentTimeMillis() + i * 60000L)
-    }
-    stage.listFiles().foreach(_.delete()); stage.delete()
-    dir
+    val dir = replayFixture(s, "sentinel")(Seq(Sentinel1Ms, Sentinel2Ms)
+      .map(ms => Seq(MessageStatus("sentinel", "delivered", 0L, "none", ms)).toDF()))
+    replayStream(s, dir, 1, Some(MessageStatusSchema)).as[MessageStatus]
   }
 
-  /** One sentinel dir per application: the rows are constants, so
-    * repeated replays (s01 + s02, and every bench iteration) reuse the
-    * same two files instead of paying a write job each. Cleaned up on
-    * JVM exit. */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+  /** Every replay fixture dir, one per (application, key), removed at
+    * JVM exit. Built OUTSIDE the map (no computeIfAbsent): a build is a
+    * Spark write job and must not stall other cache users behind a bin
+    * lock; a racing duplicate build is a spare temp dir reaped at JVM
+    * exit. */
+  private val fixtures = new ConcurrentHashMap[String, File]()
 
-  private def cachedSentinelDir(s: SparkSession): java.io.File = {
-    val key = s.sparkContext.applicationId
-    Option(sentinelCache.get(key)).getOrElse {
-      // same build-outside-the-map discipline as eventsSplitDir
-      val dir = graft.TempDirs.deleteOnExit(sentinelDir(s, Seq(
-        MessageStatus("sentinel", "delivered", 0L, "none", Sentinel1Ms),
-        MessageStatus("sentinel", "delivered", 0L, "none", Sentinel2Ms))))
-      Option(sentinelCache.putIfAbsent(key, dir)).getOrElse(dir)
+  private def cachedFixture(s: SparkSession, key: String)(build: File => Unit): File = {
+    val k = s.sparkContext.applicationId + "::" + key
+    Option(fixtures.get(k)).getOrElse {
+      val dir = TempDirs.deleteOnExit(TempDirs.scratchDir("graft_fixture_"))
+      build(dir)
+      Option(fixtures.putIfAbsent(k, dir)).getOrElse(dir)
     }
   }
 
-  private def sentinelStream(s: SparkSession, dir: java.io.File): Dataset[MessageStatus] = {
-    import s.implicits._
-    s.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[MessageStatus]].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
-      .as[MessageStatus]
-  }
-
-  /** A scratch dir on tmpfs when the host has one: the replays run to
-    * completion and discard everything they write, so durability buys
-    * nothing and /dev/shm takes the I/O off disk (measured ~40% off the
-    * outer-join replay for the checkpoint alone; the upsert/sketch-table
-    * replays also read+rewrite their bucketed state through it every
-    * micro-batch). Production deployments choose durable
-    * checkpointLocation / state URIs — this shortcut is the HARNESS's,
-    * shared by the checkpoint, replay-state, and replay-output paths. */
-  private def scratchDir(prefix: String): java.io.File = {
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) shm.toPath
-      else new java.io.File(System.getProperty("java.io.tmpdir")).toPath
-    java.nio.file.Files.createTempDirectory(base, prefix).toFile
-  }
-
-  private def scratchCkptDir(prefix: String): java.io.File = scratchDir(prefix)
-
-  /** Run `f` with no-data micro-batches disabled, restoring the prior
-    * setting after. No-data batches only matter for timers/eviction that
-    * fire AFTER the last data batch; every replay's second sentinel is
-    * itself a data batch that fires everything real, so the trailing
-    * no-data batch would only GC the sentinel's own state (~0.3-0.5 s of
-    * per-query-run overhead for zero output — two such batches showed up
-    * in s11's restarted-consumer leg alone). */
-  private def withoutNoDataBatches[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+  /** The replay fixture for `key`, built on first use: batch i is
+    * written as ONE parquet file, named in batch order with strictly
+    * ascending mtimes, so a `maxFilesPerTrigger = 1` source
+    * ([[replayStream]]) delivers file i as micro-batch i. A replay thus
+    * pins which micro-batch every row rides — the invariant that lets a
+    * batch twin serve as its oracle. An empty batch still yields its
+    * (row-less) file, so the degenerate sweep replays the same number
+    * of batches. */
+  private[graft] def replayFixture(s: SparkSession, key: String)(
+      batches: => Seq[DataFrame]): File =
+    cachedFixture(s, key) { dir =>
+      val t0 = System.currentTimeMillis()
+      batches.zipWithIndex.foreach { case (df, i) =>
+        val stage = new File(dir, s"stage$i")
+        df.coalesce(1).write.parquet(stage.getAbsolutePath)
+        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val dest = new File(dir, f"b$i%02d.parquet")
+        Files.move(part.toPath, dest.toPath)
+        dest.setLastModified(t0 + i * 60000L)
+        TempDirs.deleteRecursively(stage)
+      }
     }
+
+  /** A file-source stream over a replay fixture, `perTrigger` files per
+    * micro-batch; the schema is read from the files unless given. */
+  private[graft] def replayStream(s: SparkSession, dir: File, perTrigger: Int,
+      schema: Option[StructType] = None): DataFrame = {
+    val path = dir.getAbsolutePath
+    s.readStream.schema(schema.getOrElse(s.read.parquet(path).schema))
+      .option("maxFilesPerTrigger", perTrigger.toString).parquet(path)
   }
 
-  /** Run `f` with the replay shuffle-partition count (the stateful
-    * shuffle inherits it as its state-partition count; the replay keys
-    * are few, so 8 partitions cut per-partition state-store commit
-    * overhead without losing parallelism), restoring the session value
-    * after. */
-  private def withReplayPartitions[T](s: SparkSession)(f: => T): T =
-    withReplayPartitionsN(s, sys.env.getOrElse("GRAFT_REPLAY_PARTS", "8").toInt)(f)
-
-  /** As [[withReplayPartitions]] with an explicit count — for replays
-    * whose per-batch work scales with the DATA (s17's batch×corpus
-    * candidate joins), where the fixed detector-replay count would
-    * sort-spill at rehearsal scale. Partition count never changes a
+  /** Shuffle-partition count of a replay: the stateful shuffle inherits
+    * it as its state-partition count, and the replay keys are few, so 8
+    * partitions cut per-partition state-store commit overhead without
+    * losing parallelism (re-A/B'd at 8/4/2: 8 stands). A replay whose
+    * per-batch work scales with the DATA (s17's batch×corpus candidate
+    * joins) passes its own count to [[runReplay]], since this one would
+    * sort-spill at rehearsal scale; partition count never changes a
     * result. */
-  private def withReplayPartitionsN[T](s: SparkSession, n: Int)(f: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = s.conf.get(aqeKey)
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    // AQE off for the replay window (results never depend on it): under
-    // AQE every exchange materializes as its OWN Spark job, and the
-    // foreachBatch replays (s19/s20/s24: LSH pipelines + bucket-store
-    // reads + upsert writes per micro-batch) were measured at 13-34
-    // jobs per batch — per-stage job overhead on tiny per-batch data,
-    // with nothing for AQE to re-plan at the fixed replay partition
-    // count. GRAFT_REPLAY_AQE=1 restores the session default for A/B.
-    if (sys.env.getOrElse("GRAFT_REPLAY_AQE", "0") != "1")
-      s.conf.set(aqeKey, "false")
+  private[graft] val ReplayPartitions = 8
+
+  /** The replay conf window, with `parts` shuffle partitions. */
+  private[graft] def replayConfs(parts: Int): Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> parts.toString,
+    // AQE off (results never depend on it): under AQE every exchange
+    // materializes as its OWN Spark job, and the foreachBatch replays
+    // (s19/s20/s24: LSH pipelines + bucket-store reads + upsert writes
+    // per micro-batch) were measured at 13-34 jobs per batch — per-stage
+    // job overhead on tiny per-batch data, with nothing for AQE to
+    // re-plan at the fixed replay partition count.
     // (Whole-stage codegen stays ON: streaming plans do generate
     // per-run-novel fused sources — probe measured 12–35 Janino
     // compiles per WARM replay, codegen-cache size irrelevant — but a
@@ -185,25 +168,62 @@ object StreamingQueries {
     // 2.73/3.62 s with WSCG vs 1.46/1.85/3.26/4.05 s without, on
     // s01/s15/s19/s24. The un-fused fallback trades one big compile
     // for many small ones plus slower per-operator execution.)
-    // Checkpoint-file checksums off for the replay window (Spark 4's
+    "spark.sql.adaptive.enabled" -> "false",
+    // Checkpoint-file checksums off (Spark 4's
     // ChecksumCheckpointFileManager funnels every offset/commit/state
     // delta file through a checksum executor and close() AWAITS the
     // future — jstack sampling showed replay tasks parked in
     // ChecksumCancellableFSDataOutputStream.close more than anywhere
-    // else). The replays write scratch checkpoints on tmpfs that are
-    // deleted at stop; integrity re-verification buys nothing there.
-    // Durable production checkpoints choose their own setting.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevCk = s.conf.getOption(ckKey)
-    if (sys.env.getOrElse("GRAFT_REPLAY_CKSUM", "0") != "1")
-      s.conf.set(ckKey, "false")
-    try f finally {
-      s.conf.set("spark.sql.shuffle.partitions", prev)
-      s.conf.set(aqeKey, prevAqe)
-      prevCk match {
-        case Some(v) => s.conf.set(ckKey, v)
-        case None => s.conf.unset(ckKey)
-      }
+    // else). The replays write scratch checkpoints that are deleted at
+    // stop; integrity re-verification buys nothing there. Durable
+    // production checkpoints choose their own setting.
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    // No-data micro-batches off. They only matter for timers/eviction
+    // that fire AFTER the last data batch; every replay's last batch is
+    // itself a data batch that fires everything real, so a trailing
+    // no-data batch would only GC the sentinel's own state (~0.3-0.5 s
+    // of per-query-run overhead for zero output — two such batches
+    // showed up in s11's restarted-consumer leg alone).
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** One replay's scratch: its checkpoint and any named state dirs, all
+    * under one root that [[runReplay]] deletes on every exit. */
+  private final class Scratch(val root: File) {
+    def file(name: String): File = {
+      val f = new File(root, name); f.mkdirs(); f
+    }
+    // the sinks address state through the Hadoop FileSystem API — this
+    // scratch dir could equally be an hdfs:// or s3a:// URI
+    def path(name: String): Path = new Path(file(name).getAbsolutePath)
+  }
+
+  /** Run one replay to completion — the lifecycle every replay shares:
+    *  - a fresh [[Scratch]] (the checkpoint plus any state dirs `query`
+    *    names);
+    *  - the replay conf window ([[replayConfs]] at `parts`, plus
+    *    `confs`);
+    *  - the query `query` builds is started on the scratch checkpoint,
+    *    drained with processAllAvailable and stopped; `result` then
+    *    reads what it left, still inside the window;
+    *  - on every exit, the run's state-store providers are released now
+    *    instead of at the 60s maintenance cycle (repeated replays
+    *    otherwise stack providers — RocksDB native handles, HDFS map
+    *    caches — and each replay runs slower than the last), and the
+    *    scratch is deleted.
+    * A relation `result` returns must not scan the scratch: persist it
+    * under a [[keptDir]] first. */
+  private def runReplay[T](s: SparkSession, parts: Int = ReplayPartitions,
+      confs: Seq[(String, String)] = Nil)(
+      query: Scratch => DataStreamWriter[Row])(result: Scratch => T): T = {
+    val sc = new Scratch(TempDirs.scratchDir("graft_replay_"))
+    try Sessions.withConfs(s, replayConfs(parts) ++ confs: _*) {
+      val q = query(sc)
+        .option("checkpointLocation", sc.file("ckpt").getAbsolutePath).start()
+      try q.processAllAvailable() finally q.stop()
+      result(sc)
+    } finally {
+      org.apache.spark.sql.graft.Bridge.unloadAllStateStores()
+      TempDirs.deleteRecursively(sc.root)
     }
   }
 
@@ -211,19 +231,11 @@ object StreamingQueries {
     * return its contents as a local batch DataFrame. The collect here is
     * the memory-sink drain — the only driver materialization in the
     * replay path. */
-  private def runToSink(s: SparkSession, df: DataFrame, outputMode: String): DataFrame = withReplayPartitions(s) {
-    // Create the scratch dir before the noData mutation: a failed
-    // createTempDirectory (tmpfs full) must not leak that un-restored
-    // setting. (withReplayPartitions restores its own conf in all
-    // paths, so ordering relative to IT is not load-bearing.)
-    val ckpt = scratchCkptDir("graft_replay_ckpt_")
-    withoutNoDataBatches(s) { try {
-      val qn = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = df.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .format("memory").queryName(qn).outputMode(outputMode).start()
-      q.processAllAvailable()
-      q.stop()
+  private def runToSink(s: SparkSession, df: DataFrame, outputMode: String,
+      confs: (String, String)*): DataFrame = {
+    val qn = "replay_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    runReplay(s, confs = confs)(_ =>
+      df.writeStream.format("memory").queryName(qn).outputMode(outputMode)) { _ =>
       // materialize and DROP the sink: repeated replays (Bench runs every
       // query several times) otherwise accumulate memory-sink tables and
       // degrade the whole session
@@ -232,25 +244,26 @@ object StreamingQueries {
       val schema = out.schema
       s.catalog.dropTempView(qn)
       s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-    } finally {
-      // The replay ran to completion: release its state-store providers
-      // now instead of waiting for the 60s maintenance cycle — repeated
-      // replays otherwise stack providers (RocksDB native handles, HDFS
-      // map caches) and each replay runs slower than the last.
-      org.apache.spark.sql.graft.Bridge.unloadAllStateStores()
-      deleteRecursively(ckpt)
-    } }
+    }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.TempDirs.deleteRecursively(f)
+  /** A replay output dir that outlives the run's scratch (the returned
+    * relation scans it), removed at JVM exit — the harness stays
+    * driver-bounded at any output size, no collect. */
+  private def keptDir(): File = TempDirs.deleteOnExit(TempDirs.scratchDir("graft_replay_out_"))
+
+  /** Provider window of the `transformWithState` replays (RocksDB state
+    * store); the rest stay on the default HDFS-backed provider, so the
+    * replays exercise both stores. */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Typed empty relation — the correct stand-in for an upsert table no
     * batch ever wrote (empty corpus in the degenerate sweep). */
   private def emptyRelation(s: SparkSession,
       fields: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
     s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
+      StructType(fields.map { case (n, t) =>
         org.apache.spark.sql.types.StructField(n, t) }))
 
   /** s01 — the E1 detector replayed over the fixture. Timeout = 24h
@@ -258,8 +271,7 @@ object StreamingQueries {
   def s01(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val timeoutMs = Relational.TimeoutMs
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     runToSink(s, UndeliveredDetector.alerts(stream, timeoutMs).toDF(), "append")
       .filter(col("messageId") =!= "sentinel")
   }
@@ -288,19 +300,10 @@ object StreamingQueries {
     * HDFS-backed provider — the two detectors exercise both stores). */
   def s01Tws(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runToSink(s,
-        TwsDetector.alerts(stream, Relational.TimeoutMs).toDF(), "append")
+    val stream = replayEvents(s, d)
+    runToSink(s, TwsDetector.alerts(stream, Relational.TimeoutMs).toDF(),
+        "append", RocksDbProvider)
       .filter(col("messageId") =!= "sentinel")
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
   /** s02 — the E2 windowed monitoring view as a real FILE-SOURCE
@@ -316,8 +319,7 @@ object StreamingQueries {
     * identical. */
   def s02(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     runToSink(s, WindowedCounts.byCarrier(stream, "1 hour", "2 minutes"),
       "append")
       .filter(col("carrier") =!= "none")
@@ -343,8 +345,7 @@ object StreamingQueries {
     * re-emit — that horizon/exactness trade is the operator's
     * documented semantics, not a replay artifact). */
   def s04(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     val deduped = stream.toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "1 minute")
@@ -373,8 +374,7 @@ object StreamingQueries {
   private[operators] val JoinBoundMs = 2 * 60 * 60 * 1000L
 
   def s05(s: SparkSession, d: String): DataFrame = {
-    val base = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val base = replayEvents(s, d)
       .toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
     val sent = base.filter(col("status") === "sent")
@@ -425,8 +425,7 @@ object StreamingQueries {
     * watermark would idle at the fixture's last event and the
     * unmatched rows near the end of the fixture would never emit. */
   def s08(s: SparkSession, d: String): DataFrame = {
-    val base = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val base = replayEvents(s, d)
       .toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
     val isSentinel = col("messageId") === "sentinel"
@@ -500,8 +499,7 @@ object StreamingQueries {
   private[operators] val SessionGapMs = 600000L
 
   def s07(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
       .toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "2 minutes")
@@ -563,8 +561,7 @@ object StreamingQueries {
     * batch filter on win_start is belt-and-braces, same pattern as
     * s01/s02's post-sink messageId/carrier filters. */
   def s09(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
       .toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "2 minutes")
@@ -590,27 +587,35 @@ object StreamingQueries {
        |  count(*) AS n_carriers
        |FROM pc GROUP BY w""".stripMargin
 
-  /** The events fixture rewritten as several parquet files (cached per
-    * app+dir, cleaned at JVM exit), so a maxFilesPerTrigger=1 file
-    * source delivers REAL multi-batch input with overlapping keys —
-    * the shape an incremental sink must actually handle. */
-  private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private def eventsSplitDir(s: SparkSession, d: String,
-      nFiles: Int): java.io.File = {
-    // build OUTSIDE the map (no computeIfAbsent): the split is a Spark
-    // write job and must not stall other cache users behind a bin lock;
-    // a racing duplicate build is a spare temp dir reaped at JVM exit
-    val key = s"${s.sparkContext.applicationId}|$d|$nFiles"
-    Option(splitCache.get(key)).getOrElse {
-      val dir = scratchDir("graft_evsplit_")
+  /** The events fixture rewritten as several parquet files (one fixture
+    * per app+dir+count), so a maxFilesPerTrigger=2 file source delivers
+    * REAL multi-batch input with overlapping keys — the shape an
+    * incremental sink must actually handle. */
+  private def eventsSplitDir(s: SparkSession, d: String, nFiles: Int): File =
+    cachedFixture(s, s"split::$d::$nFiles") { dir =>
       s.read.parquet(graft.Tables.eventsPath(s, d)).repartition(nFiles)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val built = graft.TempDirs.deleteOnExit(dir)
-      Option(splitCache.putIfAbsent(key, built)).getOrElse(built)
     }
-  }
+
+  /** Run `stream` through a [[BucketedUpsert]] sink — each micro-batch
+    * reduced by `reduce`, then MERGEd into the bucketed state by `merge`
+    * on `key` — and return a scan of the final table, persisted past the
+    * scratch cleanup. Empty corpus: zero data batches wrote zero
+    * buckets — the correct table is the EMPTY relation typed like a
+    * populated one (degenerate-corpus sweep), not an error. */
+  private def upsertTable(s: SparkSession, stream: DataFrame, numBuckets: Int,
+      key: String, reduce: DataFrame => DataFrame,
+      merge: (DataFrame, DataFrame) => DataFrame, empty: => DataFrame): DataFrame =
+    runReplay(s)(sc => stream.writeStream.outputMode("update")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        BucketedUpsert.applyBatch(s, sc.path("state"), numBuckets, batchId,
+          reduce(batch), key, merge)
+      }) { sc =>
+      val resultPath = new File(keptDir(), "state").getAbsolutePath
+      BucketedUpsert.currentState(s, sc.path("state"), numBuckets)
+        .getOrElse(empty).write.mode("overwrite").parquet(resultPath)
+      s.read.parquet(resultPath)
+    }
 
   /** s10 — streaming UPSERT sink via foreachBatch: maintain a
     * latest-status-per-key table in the parquet store from the event
@@ -635,69 +640,28 @@ object StreamingQueries {
     * the file source splits batches — the oracle recomputes it in one
     * batch pass. */
   def s10(s: SparkSession, d: String): DataFrame = {
-    val split = eventsSplitDir(s, d, 5)
-    val rawSchema = s.read.parquet(split.getAbsolutePath).schema
     // 2 files/trigger over the 5-way split = 3 micro-batches with
     // overlapping keys. The contract needs MULTI-batch incrementality
     // (>=2 batches, replay, GC across versions), not one batch per
     // file — per-file triggers bought nothing but two more sink write
     // jobs per replay (round-7 verdict #6).
-    val stream = messageStatusOf(
-      s.readStream.schema(rawSchema).option("maxFilesPerTrigger", "2")
-        .parquet(split.getAbsolutePath)).toDF()
+    val stream = messageStatusOf(replayStream(s, eventsSplitDir(s, d, 5), 2)).toDF()
     // Bucket count is the horizontal-scale knob (a production table
     // uses thousands); the gate only needs >1 so a batch demonstrably
     // touches a SUBSET of buckets. 8 at replay scale halves the leaf
     // write/read tasks per merge batch vs 16 with the contract intact —
     // the oracle never observes the layout.
-    val numBuckets = 8
-    val stateBase =
-      scratchDir("graft_upsert_")
-    // the sink addresses its state through the Hadoop FileSystem API —
-    // this temp dir could equally be an hdfs:// or s3a:// URI
-    val statePath = new org.apache.hadoop.fs.Path(stateBase.getAbsolutePath)
-    // a failed scratch-dir creation must not strand stateBase — the
-    // cleanup finally below is only reachable once BOTH dirs exist
-    val ckpt = try scratchCkptDir("graft_upsert_ckpt_") catch {
-      case t: Throwable => deleteRecursively(stateBase); throw t
-    }
-    withReplayPartitions(s) { try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val latest = batch.groupBy("messageId")
-            .agg(max(struct(col("timestamp"), col("status"))).as("m"))
-            .select(col("messageId"), col("m.timestamp").as("timestamp"),
-              col("m.status").as("status"))
-          BucketedUpsert.applyBatch(s, statePath, numBuckets, batchId,
-            latest, "messageId", latestWinsMerge)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // empty corpus: zero data batches wrote zero buckets — the
-      // correct table is the EMPTY relation typed like a populated one
-      // (degenerate-corpus sweep), not an error
-      val state = BucketedUpsert.currentState(s, statePath, numBuckets)
-        .getOrElse(emptyRelation(s,
-          ("messageId", org.apache.spark.sql.types.StringType),
-          ("timestamp", org.apache.spark.sql.types.LongType),
-          ("status", org.apache.spark.sql.types.StringType)))
-      // Persist the final table past the scratch cleanup and return a
-      // SCAN over it (JVM-exit cleanup, like the other fixture caches):
-      // the harness stays driver-bounded at any |keys| — no collect.
-      val resultDir = graft.TempDirs.deleteOnExit(
-        scratchDir("graft_upsert_out_"))
-      val resultPath = new java.io.File(resultDir, "state").getAbsolutePath
-      state.select(col("messageId"), col("timestamp").as("ts_ms"),
-          col("status"))
-        .write.mode("overwrite").parquet(resultPath)
-      s.read.parquet(resultPath)
-    } finally {
-      deleteRecursively(stateBase)
-      deleteRecursively(ckpt)
-    } }
+    upsertTable(s, stream, numBuckets = 8, "messageId",
+      _.groupBy("messageId")
+        .agg(max(struct(col("timestamp"), col("status"))).as("m"))
+        .select(col("messageId"), col("m.timestamp").as("timestamp"),
+          col("m.status").as("status")),
+      latestWinsMerge,
+      emptyRelation(s,
+        ("messageId", org.apache.spark.sql.types.StringType),
+        ("timestamp", org.apache.spark.sql.types.LongType),
+        ("status", org.apache.spark.sql.types.StringType)))
+      .select(col("messageId"), col("timestamp").as("ts_ms"), col("status"))
   }
 
   /** The per-batch reduction s10's sink applies: latest-wins on the
@@ -761,28 +725,15 @@ object StreamingQueries {
     val fmt = classOf[graft.sources.memkafka.MemKafkaProvider].getName
     val topic = "s11_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val registry = new graft.sources.InMemorySchemaRegistry
-    val base = scratchCkptDir("graft_s11_")
-    def ck(name: String): String =
-      new java.io.File(base, name).getAbsolutePath
-    // One produce epoch-run: frame through the registry flow and drain
-    // the given source into the topic via the real streaming sink.
-    def produce(src: Dataset[MessageStatus], name: String): Unit = {
-      val q = graft.sources.KafkaIO.frameConfluent(src, registry)
-        .writeStream.format(fmt).option("topic", topic)
-        .option("checkpointLocation", ck(name)).start()
-      q.processAllAvailable(); q.stop()
-    }
-    val outDir = graft.TempDirs.deleteOnExit(
-      scratchDir("graft_s11_out_"))
-    val outPath = new java.io.File(outDir, "alerts").getAbsolutePath
+    val outPath = new File(keptDir(), "alerts").getAbsolutePath
     // Consumer factory: every start resumes from the SAME checkpoint —
     // the restart in the middle of the run is the point of the query.
-    def consumer() = UndeliveredDetector.alerts(
+    def consumer(sc: Scratch) = UndeliveredDetector.alerts(
         graft.sources.KafkaIO.unframeConfluent(
           s.readStream.format(fmt).option("topic", topic).load(), registry),
         Relational.TimeoutMs)
       .writeStream.format("parquet").option("path", outPath)
-      .option("checkpointLocation", ck("cons"))
+      .option("checkpointLocation", sc.file("cons").getAbsolutePath)
       .outputMode("append").start()
     // Sentinels go through the SAME Confluent framing as the produced
     // events but are appended to the broker log directly (one batch
@@ -797,12 +748,16 @@ object StreamingQueries {
         .map(r => (r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value")))
       graft.sources.memkafka.MemBroker.append(topic, framed.toSeq)
     }
-    withReplayPartitions(s) { withoutNoDataBatches(s) { try {
-      produce(eventsStream(s, d), "prod_events")
-      val c1 = consumer()
+    // The replay's own run is the produce epoch-run: frame the events
+    // through the registry flow and drain them into the topic via the
+    // real streaming sink; the consumer legs then run on its scratch.
+    try runReplay(s)(_ => graft.sources.KafkaIO
+        .frameConfluent(eventsStream(s, d), registry)
+        .writeStream.format(fmt).option("topic", topic)) { sc =>
+      val c1 = consumer(sc)
       c1.processAllAvailable()
       c1.stop() // hard stop mid-topic: offsets + detector state checkpointed
-      val c2 = consumer() // SAME checkpoint: must resume, not reconsume
+      val c2 = consumer(sc) // SAME checkpoint: must resume, not reconsume
       // sentinel 1 advances the watermark past every deadline; sentinel 2
       // is the data batch in which the timers fire (same two-batch
       // pattern as s01 — no-data micro-batches are not awaited by
@@ -816,10 +771,7 @@ object StreamingQueries {
         .filter(col("messageId") =!= "sentinel")
         .select(col("messageId"), col("phoneNumber"), col("carrier"),
           col("sentTime"), col("deadline"))
-    } finally {
-      graft.sources.memkafka.MemBroker.clear(topic)
-      deleteRecursively(base)
-    } } }
+    } finally graft.sources.memkafka.MemBroker.clear(topic)
   }
 
   /** s12 — STREAMING approximate distinct: the x50 HLL sketch running
@@ -845,8 +797,7 @@ object StreamingQueries {
     * emission policy differs. */
   def s12(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Hll
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     val agg = stream.toDF()
       .groupBy(col("carrier"))
       .agg(Hll.sketch(col("messageId")).as("sk"))
@@ -898,8 +849,7 @@ object StreamingQueries {
     * (hour, carrier). */
   def s13(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Hll
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     val agg = stream.toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "1 minute")
@@ -939,6 +889,22 @@ object StreamingQueries {
        |  ${graft.functions.Hll.estMicroDuck("z_scaled", "v_empty")} AS est_micro
        |FROM a""".stripMargin
 
+  /** Run `agg` in UPDATE mode through a foreachBatch sink that APPENDS
+    * each batch's update rows, tagged with `batch_id`, to a parquet log
+    * that outlives the replay, and return the log — every emission the
+    * mode ever produced (a memory sink only keeps the final table). */
+  private def updateEmissions(s: SparkSession, agg: DataFrame): DataFrame = {
+    val emitPath = new File(keptDir(), "emissions").getAbsolutePath
+    runReplay(s)(_ => agg.writeStream.outputMode("update")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // RuntimeLongLit, not lit: an inlined batch-id literal makes every
+        // batch's generated source novel -> a fresh Janino compile per
+        // micro-batch (see the expression's scaladoc)
+        batch.withColumn("batch_id", graft.functions.RuntimeLongLit.col(batchId))
+          .write.mode("append").parquet(emitPath)
+      })(_ => s.read.parquet(emitPath))
+  }
+
   /** s14 — the s12 sketch through UPDATE output mode, with the emission
     * stream itself gated (the round-6 "update-mode variant" candidate).
     * Complete mode re-emits every group every batch and a memory sink
@@ -965,8 +931,7 @@ object StreamingQueries {
     * and the per-batch sink I/O is O(groups updated this batch). */
   def s14(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Hll
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     val agg = stream.toDF()
       .groupBy(col("carrier"))
       .agg(Hll.sketch(col("messageId")).as("sk"))
@@ -974,29 +939,7 @@ object StreamingQueries {
         col("carrier"),
         col("sk").getField("z_scaled").as("z_scaled"),
         col("sk").getField("v_empty").as("v_empty"))
-    val emitDir = graft.TempDirs.deleteOnExit(
-      scratchDir("graft_upd_emit_"))
-    val emitPath = new java.io.File(emitDir, "emissions").getAbsolutePath
-    val ckpt = scratchCkptDir("graft_upd_ckpt_")
-    withReplayPartitions(s) { try {
-      val q = agg.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // RuntimeLongLit, not lit: an inlined batch-id literal makes every
-          // batch's generated source novel -> a fresh Janino compile per
-          // micro-batch (see the expression's scaladoc)
-          batch.withColumn("batch_id", graft.functions.RuntimeLongLit.col(batchId))
-            .write.mode("append").parquet(emitPath)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      org.apache.spark.sql.graft.Bridge.unloadAllStateStores()
-      deleteRecursively(ckpt)
-    } }
-    s.read.parquet(emitPath)
+    updateEmissions(s, agg)
       .groupBy("carrier")
       .agg(count(lit(1)).as("n_emits"),
         expr("max_by(named_struct('z', z_scaled, 've', v_empty), batch_id)")
@@ -1034,56 +977,36 @@ object StreamingQueries {
        |  ${graft.functions.Hll.estMicroDuck("z_scaled", "v_empty")} AS est_micro
        |FROM a""".stripMargin
 
-  /** Replay source for [[s15]]: three one-file micro-batches with
-    * ascending mtimes — the full fixture, the watermark-advancing
-    * sentinel, and a deliberately LATE row whose event time sits inside
-    * an already-closed fixture window. One dir per (app, sf), cached
-    * like the sentinel dir. */
-  private val lateDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private def lateReplayDir(s: SparkSession, d: String): java.io.File = {
-    val key = s.sparkContext.applicationId + "::" + d
-    Option(lateDirCache.get(key)).getOrElse {
+  /** Replay source for [[s15]]: four one-file micro-batches — the full
+    * fixture, two watermark-advancing sentinels, and a deliberately LATE
+    * row whose event time sits inside an already-closed fixture window.
+    * One fixture per (app, sf). */
+  private def lateReplayDir(s: SparkSession, d: String): File =
+    replayFixture(s, "late::" + d) {
       import s.implicits._
-      val dir = graft.TempDirs.deleteOnExit(
-        scratchDir("graft_late_"))
       val ms = messageStatusOf(
-        s.read.parquet(graft.Tables.eventsPath(s, d)))
+        s.read.parquet(graft.Tables.eventsPath(s, d))).toDF()
       // empty-fixture guard (degenerate sweep): no events -> probe at
       // epoch 0, which every sentinel-advanced watermark closes
-      val minTs = Option(ms.toDF().agg(min(col("timestamp"))).head().get(0))
+      val minTs = Option(ms.agg(min(col("timestamp"))).head().get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
-      def writeOne(n: Int, df: org.apache.spark.sql.Dataset[MessageStatus]): Unit = {
-        val stage = new java.io.File(dir, s"stage$n")
-        df.coalesce(1).write.parquet(stage.getAbsolutePath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dest = new java.io.File(dir, f"gen$n%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(System.currentTimeMillis() + n * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      writeOne(0, ms)
-      writeOne(1, Seq(MessageStatus("sentinel", "delivered", 0L, "none",
-        Sentinel1Ms)).toDS())
-      // Spark filters LATE EVENTS with the PREVIOUS batch's watermark
-      // and evicts state with the current one (the SPARK-24634
-      // two-watermark model for chained stateful operators) — so one
-      // sentinel batch is not enough for the drop contract: the batch
-      // after the sentinel still late-filters against the PRE-sentinel
-      // watermark (observed leaking on a 1-row corpus whose fixture
-      // span < the 1-minute delay; on the driver fixtures the span
-      // hides the lag). A second sentinel batch lets the closing
-      // watermark fully propagate before the probe arrives.
-      writeOne(2, Seq(MessageStatus("sentinel2", "delivered", 0L, "none",
-        Sentinel2Ms)).toDS())
-      // late probe: event time at the very START of the fixture range —
-      // its window closed when the sentinels advanced the watermark
-      writeOne(3, Seq(MessageStatus("late_probe", "sent", 1L, "verizon",
-        minTs)).toDS())
-      Option(lateDirCache.putIfAbsent(key, dir)).getOrElse(dir)
+      def one(m: MessageStatus): DataFrame = Seq(m).toDF()
+      Seq(ms,
+        one(MessageStatus("sentinel", "delivered", 0L, "none", Sentinel1Ms)),
+        // Spark filters LATE EVENTS with the PREVIOUS batch's watermark
+        // and evicts state with the current one (the SPARK-24634
+        // two-watermark model for chained stateful operators) — so one
+        // sentinel batch is not enough for the drop contract: the batch
+        // after the sentinel still late-filters against the PRE-sentinel
+        // watermark (observed leaking on a 1-row corpus whose fixture
+        // span < the 1-minute delay; on the sf fixtures the span
+        // hides the lag). A second sentinel batch lets the closing
+        // watermark fully propagate before the probe arrives.
+        one(MessageStatus("sentinel2", "delivered", 0L, "none", Sentinel2Ms)),
+        // late probe: event time at the very START of the fixture range —
+        // its window closed when the sentinels advanced the watermark
+        one(MessageStatus("late_probe", "sent", 1L, "verizon", minTs)))
     }
-  }
 
   /** s15 — watermark LATE-DATA DROP gated end-to-end: the windowed
     * per-carrier count runs in UPDATE mode with the s14 emission-log
@@ -1101,12 +1024,7 @@ object StreamingQueries {
     * WindowedHllSpec observes eviction through the listener; this is
     * the ORACLE-GATED form of the same contract. */
   def s15(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val dir = lateReplayDir(s, d)
-    val stream = s.readStream
-      .schema(implicitly[org.apache.spark.sql.Encoder[MessageStatus]].schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, lateReplayDir(s, d), 1, Some(MessageStatusSchema))
     val agg = stream
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
       .withWatermark("eventTime", "1 minute")
@@ -1114,29 +1032,7 @@ object StreamingQueries {
       .agg(count(lit(1)).as("cnt"))
       .select(col("window.start").as("win_start"), col("carrier"),
         col("cnt"))
-    val emitDir = graft.TempDirs.deleteOnExit(
-      scratchDir("graft_late_emit_"))
-    val emitPath = new java.io.File(emitDir, "emissions").getAbsolutePath
-    val ckpt = scratchCkptDir("graft_late_ckpt_")
-    withReplayPartitions(s) { try {
-      val q = agg.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // RuntimeLongLit, not lit: an inlined batch-id literal makes every
-          // batch's generated source novel -> a fresh Janino compile per
-          // micro-batch (see the expression's scaladoc)
-          batch.withColumn("batch_id", graft.functions.RuntimeLongLit.col(batchId))
-            .write.mode("append").parquet(emitPath)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      org.apache.spark.sql.graft.Bridge.unloadAllStateStores()
-      deleteRecursively(ckpt)
-    } }
-    s.read.parquet(emitPath)
+    updateEmissions(s, agg)
       .filter(col("carrier") =!= "none")
       .groupBy("win_start", "carrier")
       .agg(count(lit(1)).as("n_emits"),
@@ -1181,57 +1077,24 @@ object StreamingQueries {
     * and dashboards consume without ever rescanning events. */
   def s16(s: SparkSession, d: String): DataFrame = {
     import graft.functions.Hll
-    val split = eventsSplitDir(s, d, 5)
-    val rawSchema = s.read.parquet(split.getAbsolutePath).schema
     // 3 incremental batches (2+2+1 files) — see the s10 note: the
     // union-associativity + exactly-once composition this gates is
     // batch-count-invariant, and >=2 batches exercise it fully.
-    val stream = messageStatusOf(
-      s.readStream.schema(rawSchema).option("maxFilesPerTrigger", "2")
-        .parquet(split.getAbsolutePath)).toDF()
-    val numBuckets = 4
-    val stateBase =
-      scratchDir("graft_sktab_")
-    val statePath = new org.apache.hadoop.fs.Path(stateBase.getAbsolutePath)
-    val ckpt = try scratchCkptDir("graft_sktab_ckpt_") catch {
-      case t: Throwable => deleteRecursively(stateBase); throw t
-    }
-    withReplayPartitions(s) { try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val reduced = batch.groupBy("carrier")
-            .agg(Hll.registers(col("messageId")).as("regs"))
-          BucketedUpsert.applyBatch(s, statePath, numBuckets, batchId,
-            reduced, "carrier", registersMaxMerge)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // empty corpus: no batches -> typed empty table (see s10)
-      val state = BucketedUpsert.currentState(s, statePath, numBuckets)
-        .getOrElse(emptyRelation(s,
-          ("carrier", org.apache.spark.sql.types.StringType),
-          ("regs", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.IntegerType, containsNull = false))))
-      val resultDir = graft.TempDirs.deleteOnExit(
-        scratchDir("graft_sktab_out_"))
-      val resultPath =
-        new java.io.File(resultDir, "state").getAbsolutePath
-      state.write.mode("overwrite").parquet(resultPath)
-      s.read.parquet(resultPath)
-        .select(col("carrier"),
-          expr("aggregate(regs, CAST(0 AS BIGINT)," +
-            " (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 55 - r))")
-            .as("z_scaled"),
-          expr("CAST(size(filter(regs, r -> r = 0)) AS INT)").as("v_empty"))
-        .withColumn("est_micro",
-          expr(Hll.estMicroSpark("z_scaled", "v_empty")))
-    } finally {
-      deleteRecursively(stateBase)
-      deleteRecursively(ckpt)
-    } }
+    val stream = messageStatusOf(replayStream(s, eventsSplitDir(s, d, 5), 2)).toDF()
+    upsertTable(s, stream, numBuckets = 4, "carrier",
+      _.groupBy("carrier").agg(Hll.registers(col("messageId")).as("regs")),
+      registersMaxMerge,
+      emptyRelation(s,
+        ("carrier", org.apache.spark.sql.types.StringType),
+        ("regs", org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.IntegerType, containsNull = false))))
+      .select(col("carrier"),
+        expr("aggregate(regs, CAST(0 AS BIGINT)," +
+          " (acc, r) -> acc + shiftleft(CAST(1 AS BIGINT), 55 - r))")
+          .as("z_scaled"),
+        expr("CAST(size(filter(regs, r -> r = 0)) AS INT)").as("v_empty"))
+      .withColumn("est_micro",
+        expr(Hll.estMicroSpark("z_scaled", "v_empty")))
   }
 
   /** Replay source for [[s17]]: the documents fixture as three one-file
@@ -1239,28 +1102,13 @@ object StreamingQueries {
     * ascending mtimes, so file order IS batch order) — the oracle must
     * know which batch every doc rode, so the split is deterministic,
     * never repartition-arbitrary. One dir per (app, sf). */
-  private val admitDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
+  private def admissionReplayDir(s: SparkSession, d: String): File =
+    replayFixture(s, "admit::" + d)(
+      byDocMod3(graft.Tables.documents(s, d).select("doc_id", "text")))
 
-  private def admissionReplayDir(s: SparkSession, d: String): java.io.File = {
-    val key = s.sparkContext.applicationId + "::" + d
-    Option(admitDirCache.get(key)).getOrElse {
-      val dir = graft.TempDirs.deleteOnExit(
-        scratchDir("graft_admit_src_"))
-      val docs = graft.Tables.documents(s, d).select("doc_id", "text")
-      (0 until 3).foreach { n =>
-        val stage = new java.io.File(dir, s"stage$n")
-        docs.filter(pmod(col("doc_id"), lit(3)) === n)
-          .coalesce(1).write.parquet(stage.getAbsolutePath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dest = new java.io.File(dir, f"gen$n%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(System.currentTimeMillis() + n * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      Option(admitDirCache.putIfAbsent(key, dir)).getOrElse(dir)
-    }
-  }
+  /** `df` as three replay batches, batch n holding `doc_id % 3 = n`. */
+  private def byDocMod3(df: DataFrame): Seq[DataFrame] =
+    (0 until 3).map(n => df.filter(pmod(col("doc_id"), lit(3)) === n))
 
   /** s17 — STREAMING NEAR-DUP ADMISSION: the production ingest gate a
     * training corpus actually runs — each arriving micro-batch of
@@ -1297,14 +1145,8 @@ object StreamingQueries {
   def s17(s: SparkSession, d: String): DataFrame = {
     import graft.functions.ArrayMath
     val dir = admissionReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
-    val stateBase = scratchDir("graft_admit_state_")
-    val outBase = graft.TempDirs.deleteOnExit(scratchDir("graft_admit_out_"))
-    val ckpt = try scratchCkptDir("graft_admit_ckpt_") catch {
-      case t: Throwable => deleteRecursively(stateBase); throw t
-    }
+    val stream = replayStream(s, dir, 1)
+    val outBase = keptDir()
     // candidate-join volume scales (quadratically in the near-dup rate)
     // with the corpus: size the replay's shuffle-partition count from
     // the replay files' bytes (~1 MB parquet per partition), flooring at
@@ -1312,20 +1154,18 @@ object StreamingQueries {
     val replayBytes = Option(dir.listFiles())
       .getOrElse(Array.empty[java.io.File])
       .filter(_.getName.endsWith(".parquet")).map(_.length()).sum
-    val admitParts = math.min(512L, math.max(
-      sys.env.getOrElse("GRAFT_REPLAY_PARTS", "8").toLong,
-      replayBytes >> 20)).toInt
-    withReplayPartitionsN(s, admitParts) { try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
+    val admitParts = math.min(512L,
+      math.max(ReplayPartitions.toLong, replayBytes >> 20)).toInt
+    runReplay(s, parts = admitParts)({ sc =>
+      val stateBase = sc.file("state")
+      stream.writeStream.outputMode("update")
         .foreachBatch { (batch0: DataFrame, batchId: Long) =>
           // each micro-batch arrives as ONE replay file = one scan
           // split, which would serialize the signature pass (the
           // expensive narrow stage) on a single core at rehearsal
           // scale — spread it first; at gate scale (admitParts == the
           // detector floor) this stays a no-op
-          val batch = if (admitParts > 8) batch0.repartition(admitParts)
+          val batch = if (admitParts > ReplayPartitions) batch0.repartition(admitParts)
                       else batch0
           // signatures once per batch; they feed the band join, the
           // verify lookups, and the state write (narrowSigOf persists
@@ -1378,16 +1218,9 @@ object StreamingQueries {
             .parquet(new java.io.File(stateBase, s"sig_b$batchId")
               .getAbsolutePath)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      s.read.parquet(Option(outBase.listFiles())
+    })(_ => s.read.parquet(Option(outBase.listFiles())
         .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.startsWith("b")).map(_.getAbsolutePath).toSeq: _*)
-    } finally {
-      deleteRecursively(stateBase)
-      deleteRecursively(ckpt)
-    } }
+        .filter(_.getName.startsWith("b")).map(_.getAbsolutePath).toSeq: _*))
   }
 
   val s17Sql: String = {
@@ -1419,10 +1252,7 @@ object StreamingQueries {
     * steps, not the MessageStatus projection). */
   private def funnelEventsStream(s: SparkSession, d: String): Dataset[FunnelEvent] = {
     import s.implicits._
-    val dir = eventsSplitDir(s, d, 8)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    graft.Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(dir.getAbsolutePath))
+    graft.Tables.normalizeEventTs(rawEventsStream(s, d))
       .selectExpr("user_id AS userId", "event_type AS eventType",
         "unix_millis(ts) AS tms")
       .as[FunnelEvent]
@@ -1441,21 +1271,13 @@ object StreamingQueries {
   def s18(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val stream = funnelEventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s))
+      .unionByName(sentinelStream(s)
         .select(lit(-1L).as("userId"), lit("sentinel").as("eventType"),
           col("timestamp").as("tms"))
         .as[FunnelEvent])
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runToSink(s,
-        FunnelDetector.funnel(stream, FunnelHorizonMs).toDF(), "append")
+    runToSink(s, FunnelDetector.funnel(stream, FunnelHorizonMs).toDF(),
+        "append", RocksDbProvider)
       .filter(col("user_id") >= 0)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
   }
 
   /** Replay source for [[s19]]: the simulated next-crawl relation
@@ -1464,28 +1286,9 @@ object StreamingQueries {
     * batching-INDEPENDENT (every classification is against the stored
     * previous-snapshot hash, never intra-crawl), but a pinned split
     * keeps replays byte-identical. One dir per (app, sf). */
-  private val diffDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private def diffReplayDir(s: SparkSession, d: String): java.io.File = {
-    val key = s.sparkContext.applicationId + "::" + d
-    Option(diffDirCache.get(key)).getOrElse {
-      val dir = graft.TempDirs.deleteOnExit(scratchDir("graft_diff_src_"))
-      val next = Diff.nextCrawl(
-        graft.Tables.documents(s, d).select("doc_id", "text"))
-      (0 until 3).foreach { n =>
-        val stage = new java.io.File(dir, s"stage$n")
-        next.filter(pmod(col("doc_id"), lit(3)) === n)
-          .coalesce(1).write.parquet(stage.getAbsolutePath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dest = new java.io.File(dir, f"crawl$n%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(System.currentTimeMillis() + n * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      Option(diffDirCache.putIfAbsent(key, dir)).getOrElse(dir)
-    }
-  }
+  private def diffReplayDir(s: SparkSession, d: String): File =
+    replayFixture(s, "diff::" + d)(byDocMod3(Diff.nextCrawl(
+      graft.Tables.documents(s, d).select("doc_id", "text"))))
 
   /** s19 — STREAMING CORPUS DIFF, the CDC twin of x69: the previous
     * snapshot's content hashes live in a hash-bucketed upsert table
@@ -1510,28 +1313,19 @@ object StreamingQueries {
     * is x69's batch twin over the same fixture. */
   def s19(s: SparkSession, d: String): DataFrame = {
     import graft.functions.PortableHash
-    val dir = diffReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, diffReplayDir(s, d), 1)
     val nBuckets = 16
-    val stateDir = scratchDir("graft_diff_state_")
-    val stateBase = new org.apache.hadoop.fs.Path(stateDir.getAbsolutePath)
-    val outBase = graft.TempDirs.deleteOnExit(scratchDir("graft_diff_out_"))
-    val ckpt = try scratchCkptDir("graft_diff_ckpt_") catch {
-      case t: Throwable => deleteRecursively(stateDir); throw t
-    }
-    withReplayPartitions(s) { try {
+    val outBase = keptDir()
+    val snap = graft.Tables.documents(s, d)
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), PortableHash.h60(col("text")).as("h"),
+        lit(false).as("seen"))
+    runReplay(s)({ sc =>
+      val stateBase = sc.path("state")
       // version 0 of the state log = the previous snapshot's hash table
-      val snap = graft.Tables.documents(s, d)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), PortableHash.h60(col("text")).as("h"),
-          lit(false).as("seen"))
       BucketedUpsert.applyBatch(s, stateBase, nBuckets, 0L, snap, "doc_id",
         (_, u) => u)
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
+      stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val vid = batchId + 1 // version 0 is the snapshot load
           val arrived = batch.filter(col("text").isNotNull)
@@ -1566,26 +1360,26 @@ object StreamingQueries {
                 (col("seen") || coalesce(col("sn"), lit(false))).as("seen")),
             knownTouched = Some(touched))
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // crawl-close reconciliation: snapshot keys never seen = removed.
-      // Written next to the verdicts so the returned relation outlives
-      // the state dir this finally block deletes.
-      BucketedUpsert.currentState(s, stateBase, nBuckets)
-        .getOrElse(snap.limit(0)) // empty corpus: nothing to reconcile
-        .filter(!col("seen"))
-        .select(col("doc_id"), lit("removed").as("status"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(outBase, "removed").getAbsolutePath)
-      s.read.parquet(Option(outBase.listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("b") || f.getName == "removed")
-        .map(_.getAbsolutePath).toSeq: _*)
-    } finally {
-      deleteRecursively(stateDir)
-      deleteRecursively(ckpt)
-    } }
+    })(sc => crawlClose(s, sc.path("state"), nBuckets, snap, outBase, !col("seen")))
+  }
+
+  /** Crawl-close reconciliation of the diff replays: every state key
+    * matching `removed` (snapshot keys never seen) is emitted as
+    * `removed`, written next to the per-batch verdicts so the returned
+    * relation — verdicts plus removals — outlives the scratch state
+    * dir. */
+  private def crawlClose(s: SparkSession, stateBase: Path, nBuckets: Int,
+      snap: DataFrame, outBase: File, removed: org.apache.spark.sql.Column): DataFrame = {
+    BucketedUpsert.currentState(s, stateBase, nBuckets)
+      .getOrElse(snap.limit(0)) // empty corpus: nothing to reconcile
+      .filter(removed)
+      .select(col("doc_id"), lit("removed").as("status"))
+      .write.mode("overwrite")
+      .parquet(new File(outBase, "removed").getAbsolutePath)
+    s.read.parquet(Option(outBase.listFiles())
+      .getOrElse(Array.empty[File])
+      .filter(f => f.getName.startsWith("b") || f.getName == "removed")
+      .map(_.getAbsolutePath).toSeq: _*)
   }
 
   // ---------------------------------------------------------------- s24
@@ -1601,13 +1395,8 @@ object StreamingQueries {
     *  - within-batch duplicate: rows with doc_id % 9 = 2 duplicated in
     *    their OWN file with `text || ' dup'`.
     */
-  private val diffRearrDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
-  private def diffRearrReplayDir(s: SparkSession, d: String): java.io.File = {
-    val key = s.sparkContext.applicationId + "::" + d
-    Option(diffRearrDirCache.get(key)).getOrElse {
-      val dir = graft.TempDirs.deleteOnExit(scratchDir("graft_rearr_src_"))
+  private def diffRearrReplayDir(s: SparkSession, d: String): File =
+    replayFixture(s, "rearr::" + d) {
       val next = Diff.nextCrawl(
         graft.Tables.documents(s, d).select("doc_id", "text"))
       val aug = next
@@ -1620,19 +1409,8 @@ object StreamingQueries {
         .unionByName(next.filter(col("doc_id") % 9 === 2)
           .select(col("doc_id"), concat(col("text"), lit(" dup")).as("text"),
             pmod(col("doc_id"), lit(3)).as("b")))
-      (0 until 3).foreach { n =>
-        val stage = new java.io.File(dir, s"stage$n")
-        aug.filter(col("b") === n).drop("b")
-          .coalesce(1).write.parquet(stage.getAbsolutePath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dest = new java.io.File(dir, f"crawl$n%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(System.currentTimeMillis() + n * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      Option(diffRearrDirCache.putIfAbsent(key, dir)).getOrElse(dir)
+      (0 until 3).map(n => aug.filter(col("b") === n).drop("b"))
     }
-  }
 
   /** s24 — s19 under INTRA-CRAWL RE-ARRIVALS: the same-key-arrives-
     * twice semantics the s19 gate's pinned split never exercises,
@@ -1663,27 +1441,18 @@ object StreamingQueries {
     * file's minimum-hash copy and diffs against the snapshot. */
   def s24(s: SparkSession, d: String): DataFrame = {
     import graft.functions.PortableHash
-    val dir = diffRearrReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, diffRearrReplayDir(s, d), 1)
     val nBuckets = 16
-    val stateDir = scratchDir("graft_rearr_state_")
-    val stateBase = new org.apache.hadoop.fs.Path(stateDir.getAbsolutePath)
-    val outBase = graft.TempDirs.deleteOnExit(scratchDir("graft_rearr_out_"))
-    val ckpt = try scratchCkptDir("graft_rearr_ckpt_") catch {
-      case t: Throwable => deleteRecursively(stateDir); throw t
-    }
-    withReplayPartitions(s) { try {
-      val snap = graft.Tables.documents(s, d)
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"), PortableHash.h60(col("text")).as("h"),
-          lit(false).as("seen"), lit(true).as("snap"))
+    val outBase = keptDir()
+    val snap = graft.Tables.documents(s, d)
+      .filter(col("text").isNotNull)
+      .select(col("doc_id"), PortableHash.h60(col("text")).as("h"),
+        lit(false).as("seen"), lit(true).as("snap"))
+    runReplay(s)({ sc =>
+      val stateBase = sc.path("state")
       BucketedUpsert.applyBatch(s, stateBase, nBuckets, 0L, snap, "doc_id",
         (_, u) => u)
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
+      stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val vid = batchId + 1
           // within-batch dedup: smallest content hash wins (order-free)
@@ -1723,23 +1492,8 @@ object StreamingQueries {
                   lit(true).as("seen"), lit(false).as("snap"))),
             knownTouched = Some(touched))
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      BucketedUpsert.currentState(s, stateBase, nBuckets)
-        .getOrElse(snap.limit(0)) // empty corpus: nothing to reconcile
-        .filter(col("snap") && !col("seen"))
-        .select(col("doc_id"), lit("removed").as("status"))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(outBase, "removed").getAbsolutePath)
-      s.read.parquet(Option(outBase.listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("b") || f.getName == "removed")
-        .map(_.getAbsolutePath).toSeq: _*)
-    } finally {
-      deleteRecursively(stateDir)
-      deleteRecursively(ckpt)
-    } }
+    })(sc => crawlClose(s, sc.path("state"), nBuckets, snap, outBase,
+      col("snap") && !col("seen")))
   }
 
   /** Oracle: first-file-wins, min-hash-within-file resolution, then
@@ -1843,26 +1597,14 @@ object StreamingQueries {
     * harness entry above reads the property once as its default. */
   def s20(s: SparkSession, d: String, edgeCap: Int): DataFrame = {
     import graft.functions.ArrayMath
-    val dir = admissionReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, admissionReplayDir(s, d), 1)
     val nBuckets = 16
-    val sigBase = scratchDir("graft_split_sig_")
-    val labDir = scratchDir("graft_split_lab_")
-    val memDir = scratchDir("graft_split_mem_")
-    val labBase = new org.apache.hadoop.fs.Path(labDir.getAbsolutePath)
-    val memBase = new org.apache.hadoop.fs.Path(memDir.getAbsolutePath)
-    val outBase = graft.TempDirs.deleteOnExit(scratchDir("graft_split_out_"))
-    val ckpt = try scratchCkptDir("graft_split_ckpt_") catch {
-      case t: Throwable =>
-        deleteRecursively(sigBase); deleteRecursively(labDir)
-        deleteRecursively(memDir); throw t
-    }
-    withReplayPartitions(s) { try {
-      val q = stream.writeStream
-        .option("checkpointLocation", ckpt.getAbsolutePath)
-        .outputMode("update")
+    val outBase = keptDir()
+    runReplay(s)({ sc =>
+      val sigBase = sc.file("sig")
+      val labBase = sc.path("lab")
+      val memBase = sc.path("mem")
+      stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sigB = Dedup.admissionSig(batch)
           val priorDirs = Option(sigBase.listFiles())
@@ -2071,12 +1813,10 @@ object StreamingQueries {
             .parquet(new java.io.File(sigBase, s"sig_b$batchId")
               .getAbsolutePath)
         }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      // the maintained table IS the product; written beside the state
-      // so the returned relation outlives the finally-block cleanup
-      BucketedUpsert.currentState(s, labBase, nBuckets)
+    }) { sc =>
+      // the maintained table IS the product; written beside the
+      // verdicts so the returned relation outlives the scratch cleanup
+      BucketedUpsert.currentState(s, sc.path("lab"), nBuckets)
         .getOrElse(emptyRelation(s, // empty corpus: no labels assigned
           ("doc_id", org.apache.spark.sql.types.LongType),
           ("lbl", org.apache.spark.sql.types.LongType)))
@@ -2085,38 +1825,16 @@ object StreamingQueries {
         .write.mode("overwrite")
         .parquet(new java.io.File(outBase, "split").getAbsolutePath)
       s.read.parquet(new java.io.File(outBase, "split").getAbsolutePath)
-    } finally {
-      deleteRecursively(sigBase); deleteRecursively(labDir)
-      deleteRecursively(memDir); deleteRecursively(ckpt)
-    } }
+    }
   }
 
   // ---------------------------------------------------------------- s21
-  private val quantDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.io.File]()
-
   /** documents (doc_id, lang, n_chars) split into 3 replay files by
-    * doc_id % 3 — the quantile stream's micro-batch source (cached per
-    * (session, sfDir) like [[admissionReplayDir]]). */
-  private def quantReplayDir(s: SparkSession, d: String): java.io.File = {
-    val key = s.sparkContext.applicationId + "::quant::" + d
-    Option(quantDirCache.get(key)).getOrElse {
-      val dir = graft.TempDirs.deleteOnExit(scratchDir("graft_quant_src_"))
-      val docs = graft.Tables.documents(s, d)
-        .select("doc_id", "lang", "source", "n_chars")
-      (0 until 3).foreach { n =>
-        val stage = new java.io.File(dir, s"stage$n")
-        docs.filter(pmod(col("doc_id"), lit(3)) === n)
-          .coalesce(1).write.parquet(stage.getAbsolutePath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val dest = new java.io.File(dir, f"gen$n%02d.parquet")
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(System.currentTimeMillis() + n * 60000L)
-        stage.listFiles().foreach(_.delete()); stage.delete()
-      }
-      Option(quantDirCache.putIfAbsent(key, dir)).getOrElse(dir)
-    }
-  }
+    * doc_id % 3 — the quantile stream's micro-batch source (one fixture
+    * per (session, sfDir) like [[admissionReplayDir]]). */
+  private def quantReplayDir(s: SparkSession, d: String): File =
+    replayFixture(s, "quant::" + d)(byDocMod3(graft.Tables.documents(s, d)
+      .select("doc_id", "lang", "source", "n_chars")))
 
   /** s21 — STREAMING quantiles: the x59 bottom-k sample sketch
     * maintained by a streaming aggregation, completing the streaming
@@ -2142,13 +1860,10 @@ object StreamingQueries {
     * rationale as s12 — at production cardinality the sink policy is
     * update mode; the aggregation operator and its state are identical. */
   def s21(s: SparkSession, d: String): DataFrame = {
-    val dir = quantReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
     // 2 files/trigger over the 3-way split = 2 micro-batches: the
     // second batch still forces the cross-batch state merge the gate
     // exists for; a third batch re-proves nothing (s19's finding)
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "2").parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, quantReplayDir(s, d), 2)
     runToSink(s,
       Sketches.sampleQuantiles(stream, groupCol = "lang",
         idCol = "doc_id", valueCol = "n_chars"), "complete")
@@ -2167,10 +1882,7 @@ object StreamingQueries {
     * (x75) over the stored table gets the identical answer. Oracle =
     * x75's own SQL; complete mode, s12's rationale. */
   def s22(s: SparkSession, d: String): DataFrame = {
-    val dir = quantReplayDir(s, d)
-    val rawSchema = s.read.parquet(dir.getAbsolutePath).schema
-    val stream = s.readStream.schema(rawSchema)
-      .option("maxFilesPerTrigger", "2").parquet(dir.getAbsolutePath)
+    val stream = replayStream(s, quantReplayDir(s, d), 2)
     runToSink(s,
       Sampling.prioritySample(stream, "source", "doc_id", "n_chars"),
       "complete")
@@ -2186,8 +1898,7 @@ object StreamingQueries {
     * gated at once. Oracle: the batch twin assigns each event its two
     * aligned window starts explicitly (k ∈ {0,1}). */
   def s23(s: SparkSession, d: String): DataFrame = {
-    val stream = eventsStream(s, d)
-      .unionByName(sentinelStream(s, cachedSentinelDir(s)))
+    val stream = replayEvents(s, d)
     runToSink(s,
       WindowedCounts.byCarrierHopping(stream, "1 hour", "30 minutes",
         "2 minutes"), "append")

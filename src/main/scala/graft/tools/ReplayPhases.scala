@@ -1,6 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{SparkEntry, TempDirs}
+import graft.operators.{Sessions, StreamingQueries}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -127,51 +128,26 @@ object ReplayPhases {
 
     // ---- irreducible scaffold: noop replays through the same shape
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(
-      new java.io.File("/dev/shm").toPath, "graft_noop_src_").toFile
-    (0 until 3).foreach { n =>
-      val stage = new java.io.File(dir, s"stage$n")
-      Seq.tabulate(10)(i => (n * 10 + i).toLong).toDF("v")
-        .coalesce(1).write.parquet(stage.getAbsolutePath)
-      val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        new java.io.File(dir, f"gen$n%02d.parquet").toPath)
-      stage.listFiles().foreach(_.delete()); stage.delete()
-    }
+    val dir = StreamingQueries.replayFixture(spark, "noop")(
+      (0 until 3).map(n => Seq.tabulate(10)(i => (n * 10 + i).toLong).toDF("v")))
     val schema = spark.read.parquet(dir.getAbsolutePath).schema
-    def noop(stateful: Boolean): Double = {
-      val confs = Seq(
-        "spark.sql.shuffle.partitions" -> "8",
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
-        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        val ckpt = java.nio.file.Files.createTempDirectory(
-          new java.io.File("/dev/shm").toPath, "graft_noop_ck_").toFile
-        val t0 = System.nanoTime()
-        val src = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(dir.getAbsolutePath)
-        val df = if (stateful) src.groupBy(pmod(col("v"), lit(4))).count()
-          else src.select(col("v") + 1)
-        val qn = "noop_" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val q = df.writeStream.format("memory").queryName(qn)
-          .outputMode(if (stateful) "update" else "append")
-          .option("checkpointLocation", ckpt.getAbsolutePath).start()
-        q.processAllAvailable(); q.stop()
-        spark.table(qn).collect()
-        spark.catalog.dropTempView(qn)
-        val w = (System.nanoTime() - t0) / 1e9
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(ckpt)
-        w
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+    def noop(stateful: Boolean): Double = Sessions.withConfs(spark,
+        StreamingQueries.replayConfs(StreamingQueries.ReplayPartitions): _*) {
+      val ckpt = TempDirs.scratchDir("graft_noop_ck_")
+      val t0 = System.nanoTime()
+      val src = StreamingQueries.replayStream(spark, dir, 1, Some(schema))
+      val df = if (stateful) src.groupBy(pmod(col("v"), lit(4))).count()
+        else src.select(col("v") + 1)
+      val qn = "noop_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      val q = df.writeStream.format("memory").queryName(qn)
+        .outputMode(if (stateful) "update" else "append")
+        .option("checkpointLocation", ckpt.getAbsolutePath).start()
+      q.processAllAvailable(); q.stop()
+      spark.table(qn).collect()
+      spark.catalog.dropTempView(qn)
+      val w = (System.nanoTime() - t0) / 1e9
+      TempDirs.deleteRecursively(ckpt)
+      w
     }
     noop(stateful = false) // warm the streaming machinery path
     for (k <- 1 to 3)
