@@ -1,14 +1,31 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader over a driver-provided scale-factor directory
-  * (TESTDATA.md). One parquet file per table; schema inferred from the
-  * file footer so predicate pushdown / column pruning apply from the scan.
+  * (TESTDATA.md). One parquet file per table, read through [[read]]: the
+  * footer is read on the driver and no Spark job runs to infer the
+  * schema; predicate pushdown and column pruning apply from the scan.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(paths: _*)` without its schema-inference job:
+    * the read is handed [[schemaOf]]. */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.schema(schemaOf(spark, paths: _*)).parquet(paths: _*)
+
+  /** The schema `spark.read.parquet(paths: _*)` infers, taken from the
+    * footer Spark would consult, read on the driver ([[FooterSchema]]).
+    * No cache: every call reads the footer afresh, so a file rewritten
+    * with another schema is read with the new one. With no footer to read
+    * (a missing path, no data file), Spark's own inference runs and raises
+    * its own error. */
+  def schemaOf(spark: SparkSession, paths: String*): StructType =
+    FooterSchema(spark, paths).getOrElse(spark.read.parquet(paths: _*).schema)
 
   def region(s: SparkSession, d: String): DataFrame   = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = apply(s, d, "nation")
@@ -28,7 +45,7 @@ object Tables {
     * DuckDB's naive-timestamp reading of the same file.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    normalizeEventTs(s.read.parquet(eventsPath(s, d)))
+    normalizeEventTs(read(s, eventsPath(s, d)))
 
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -55,7 +72,7 @@ object Tables {
       s"${s.sparkContext.applicationId}|$d", _ => {
         val raw = s"$d/events.parquet"
         val readable =
-          try { s.read.parquet(raw).schema; true }
+          try { schemaOf(s, raw); true }
           catch { case _: Exception => false }
         if (readable) raw
         else normalizeLock.synchronized {
@@ -68,7 +85,7 @@ object Tables {
               .toFile)
           val out = new java.io.File(dir, "events").getAbsolutePath
           operators.Sessions.withConfs(s, NanosKey -> "true") {
-            normalizeEventTs(s.read.parquet(raw))
+            normalizeEventTs(read(s, raw))
               .write.mode("overwrite").parquet(out)
           }
           out

@@ -171,7 +171,7 @@ object Bucketed {
       val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
       Option(dimPath.putIfAbsent(key, built)).getOrElse(built)
     }
-    s.read.parquet(p)
+    Tables.read(s, p)
   }
 
   /** q33 — DYNAMIC partition pruning: the filter is on the dimension's

@@ -159,7 +159,7 @@ object BucketedUpsert {
       val prior = latestVersions(vs, touched, batchId)
       val target =
         if (prior.isEmpty) reduced.filter(lit(false))
-        else s.read.parquet(prior.iterator
+        else graft.Tables.read(s, prior.iterator
           .map { case (b, vid) => leafPath(stateBase, vid, b).toString }
           .toSeq: _*)
       val merged = merge(target, reduced)
@@ -261,7 +261,7 @@ object BucketedUpsert {
     val leaves = latestVersions(cachedListing(fs, stateBase, key),
       buckets, before)
     if (leaves.isEmpty) None
-    else Some(s.read.parquet(leaves.iterator
+    else Some(graft.Tables.read(s, leaves.iterator
       .map { case (b, vid) => leafPath(stateBase, vid, b).toString }
       .toSeq: _*))
   }
@@ -276,7 +276,7 @@ object BucketedUpsert {
     val leaves = latestVersions(cachedListing(fs, stateBase, key),
       0 until numBuckets, Long.MaxValue)
     if (leaves.isEmpty) None
-    else Some(s.read.parquet(leaves.iterator
+    else Some(graft.Tables.read(s, leaves.iterator
       .map { case (b, vid) => leafPath(stateBase, vid, b).toString }
       .toSeq: _*))
   }

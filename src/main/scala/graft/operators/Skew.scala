@@ -101,7 +101,7 @@ object Skew {
       val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
       Option(splitPath.putIfAbsent(key, built)).getOrElse(built)
     }
-    s.read.parquet(p)
+    Tables.read(s, p)
   }
 
   /** The 25-row aggregated customer dim, materialized to parquet once
@@ -128,7 +128,7 @@ object Skew {
       val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
       Option(dimSplitPath.putIfAbsent(key, built)).getOrElse(built)
     }
-    s.read.parquet(p)
+    Tables.read(s, p)
   }
 
   /** Confs under which AQE's OptimizeSkewedJoin fires at fixture scale,

@@ -49,7 +49,7 @@ object StreamingQueries {
     * is just N tasks wide). */
   private def rawEventsStream(s: SparkSession, d: String): DataFrame = {
     val path = eventsSplitDir(s, d, 8).getAbsolutePath
-    s.readStream.schema(s.read.parquet(path).schema).parquet(path)
+    s.readStream.schema(graft.Tables.schemaOf(s, path)).parquet(path)
   }
 
   /** [[eventsStream]] followed by the two sentinel micro-batches. */
@@ -138,7 +138,7 @@ object StreamingQueries {
   private[graft] def replayStream(s: SparkSession, dir: File, perTrigger: Int,
       schema: Option[StructType] = None): DataFrame = {
     val path = dir.getAbsolutePath
-    s.readStream.schema(schema.getOrElse(s.read.parquet(path).schema))
+    s.readStream.schema(schema.getOrElse(graft.Tables.schemaOf(s, path)))
       .option("maxFilesPerTrigger", perTrigger.toString).parquet(path)
   }
 
@@ -593,7 +593,7 @@ object StreamingQueries {
     * incremental sink must actually handle. */
   private def eventsSplitDir(s: SparkSession, d: String, nFiles: Int): File =
     cachedFixture(s, s"split::$d::$nFiles") { dir =>
-      s.read.parquet(graft.Tables.eventsPath(s, d)).repartition(nFiles)
+      graft.Tables.read(s, graft.Tables.eventsPath(s, d)).repartition(nFiles)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)
     }
 
@@ -612,9 +612,10 @@ object StreamingQueries {
           reduce(batch), key, merge)
       }) { sc =>
       val resultPath = new File(keptDir(), "state").getAbsolutePath
-      BucketedUpsert.currentState(s, sc.path("state"), numBuckets)
-        .getOrElse(empty).write.mode("overwrite").parquet(resultPath)
-      s.read.parquet(resultPath)
+      val state = BucketedUpsert.currentState(s, sc.path("state"), numBuckets)
+        .getOrElse(empty)
+      state.write.mode("overwrite").parquet(resultPath)
+      s.read.schema(state.schema).parquet(resultPath)
     }
 
   /** s10 — streaming UPSERT sink via foreachBatch: maintain a
@@ -902,7 +903,7 @@ object StreamingQueries {
         // micro-batch (see the expression's scaladoc)
         batch.withColumn("batch_id", graft.functions.RuntimeLongLit.col(batchId))
           .write.mode("append").parquet(emitPath)
-      })(_ => s.read.parquet(emitPath))
+      })(_ => graft.Tables.read(s, emitPath))
   }
 
   /** s14 — the s12 sketch through UPDATE output mode, with the emission
@@ -985,7 +986,7 @@ object StreamingQueries {
     replayFixture(s, "late::" + d) {
       import s.implicits._
       val ms = messageStatusOf(
-        s.read.parquet(graft.Tables.eventsPath(s, d))).toDF()
+        graft.Tables.read(s, graft.Tables.eventsPath(s, d))).toDF()
       // empty-fixture guard (degenerate sweep): no events -> probe at
       // epoch 0, which every sentinel-advanced watermark closes
       val minTs = Option(ms.agg(min(col("timestamp"))).head().get(0))
@@ -1178,7 +1179,8 @@ object StreamingQueries {
             .filter(_.getName.drop(5).toLong < batchId)
             .map(_.getAbsolutePath)
           val prior =
-            if (priorDirs.isEmpty) None else Some(s.read.parquet(priorDirs: _*))
+            if (priorDirs.isEmpty) None
+            else Some(s.read.schema(sigB.schema).parquet(priorDirs: _*))
           val bandsB = Dedup.admissionBands(sigB)
           // same-batch predecessors: partner with smaller id
           val sameCand = bandsB.alias("x")
@@ -1218,7 +1220,7 @@ object StreamingQueries {
             .parquet(new java.io.File(stateBase, s"sig_b$batchId")
               .getAbsolutePath)
         }
-    })(_ => s.read.parquet(Option(outBase.listFiles())
+    })(_ => graft.Tables.read(s, Option(outBase.listFiles())
         .getOrElse(Array.empty[java.io.File])
         .filter(_.getName.startsWith("b")).map(_.getAbsolutePath).toSeq: _*))
   }
@@ -1376,7 +1378,7 @@ object StreamingQueries {
       .select(col("doc_id"), lit("removed").as("status"))
       .write.mode("overwrite")
       .parquet(new File(outBase, "removed").getAbsolutePath)
-    s.read.parquet(Option(outBase.listFiles())
+    graft.Tables.read(s, Option(outBase.listFiles())
       .getOrElse(Array.empty[File])
       .filter(f => f.getName.startsWith("b") || f.getName == "removed")
       .map(_.getAbsolutePath).toSeq: _*)
@@ -1613,7 +1615,8 @@ object StreamingQueries {
             .filter(_.getName.drop(5).toLong < batchId)
             .map(_.getAbsolutePath)
           val prior =
-            if (priorDirs.isEmpty) None else Some(s.read.parquet(priorDirs: _*))
+            if (priorDirs.isEmpty) None
+            else Some(s.read.schema(sigB.schema).parquet(priorDirs: _*))
           val bandsB = Dedup.admissionBands(sigB)
           val sameCand = bandsB.alias("x")
             .join(bandsB.alias("y"), col("x.bk") === col("y.bk") &&
@@ -1816,15 +1819,15 @@ object StreamingQueries {
     }) { sc =>
       // the maintained table IS the product; written beside the
       // verdicts so the returned relation outlives the scratch cleanup
-      BucketedUpsert.currentState(s, sc.path("lab"), nBuckets)
+      val split = BucketedUpsert.currentState(s, sc.path("lab"), nBuckets)
         .getOrElse(emptyRelation(s, // empty corpus: no labels assigned
           ("doc_id", org.apache.spark.sql.types.LongType),
           ("lbl", org.apache.spark.sql.types.LongType)))
         .select(col("doc_id"), col("lbl").as("unit"))
         .withColumn("split", Clusters.splitCoin(col("unit"), 80))
-        .write.mode("overwrite")
-        .parquet(new java.io.File(outBase, "split").getAbsolutePath)
-      s.read.parquet(new java.io.File(outBase, "split").getAbsolutePath)
+      val splitPath = new java.io.File(outBase, "split").getAbsolutePath
+      split.write.mode("overwrite").parquet(splitPath)
+      s.read.schema(split.schema).parquet(splitPath)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, TempDirs}
+import graft.{SparkEntry, Tables, TempDirs}
 import graft.operators.{Sessions, StreamingQueries}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -130,7 +130,7 @@ object ReplayPhases {
     import spark.implicits._
     val dir = StreamingQueries.replayFixture(spark, "noop")(
       (0 until 3).map(n => Seq.tabulate(10)(i => (n * 10 + i).toLong).toDF("v")))
-    val schema = spark.read.parquet(dir.getAbsolutePath).schema
+    val schema = Tables.schemaOf(spark, dir.getAbsolutePath)
     def noop(stateful: Boolean): Double = Sessions.withConfs(spark,
         StreamingQueries.replayConfs(StreamingQueries.ReplayPartitions): _*) {
       val ckpt = TempDirs.scratchDir("graft_noop_ck_")
