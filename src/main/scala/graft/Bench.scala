@@ -18,115 +18,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // size reducers by bytes, not cluster parallelism: tiny shuffles
-      // coalesce to a few tasks locally; at scale AQE keeps thousands
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Let AQE size CACHED-plan output partitioning by bytes too: the
-      // persisted signature relations (Dedup.persistShared — x02/x74/
-      // x76/x77 and SimJoin.rankedOf) otherwise materialize at the
-      // session's static shuffle-partition count and every downstream
-      // consumer stage inherits that task count — measured 1.4-1.6x
-      // per-task overhead at sf0.1 (32 vs 8 partitions) with identical
-      // results; at scale the same byte-based rule keeps the cache
-      // wide. (r15, guide §2 right-sizing.)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Every execution start (and every AQE replan) stringifies the
-      // physical plan on the MAIN thread for the listener event; with
-      // wide expression trees (language-ID CaseWhen, 16-permutation
-      // minhash projections) formatted-mode explain showed up as
-      // multi-second single-threaded stalls in jstack samples. Cap the
-      // string and use simple mode — the bench doesn't read plan
-      // descriptions.
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      // ObjectHashAggregateExec (every TypedImperativeAggregate —
-      // BoundedSet, HLL, CMS, bottom-k — and every collect_set /
-      // collect_list) falls back to SORT-BASED aggregation once a
-      // partition sees more than this many distinct keys; the default
-      // is 128, so x18's per-shingle-hash aggregation (millions of
-      // groups) always sorted its full input, and that sort's external
-      // sorter spills to disk exactly when the session heap is crowded
-      // — the mechanism behind the 17× same-code swing on x18 between
-      // a fresh JVM and a late-session run. The threshold is KEY-COUNT
-      // based, not memory-based, and up to 32 tasks aggregate
-      // concurrently at local[32]: 1M keys × ~100 B of state ≈
-      // 100 MB/task, ~3.2 GB worst-case concurrent against the 16 GB
-      // heap (the earlier 4M setting allowed ~12.8 GB — an OOM risk,
-      // not a spill). 1M still keeps x18's per-partition shingle-hash
-      // group counts (~150 K/partition at sf0.1) hash-based; past the
-      // threshold the sort fallback protects (the 100× rehearsal path).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "1048576"))
-      // Janino-compiled class cache (STATIC conf, default 100 entries).
-      // A 143-query session cycles 100 entries constantly, so even
-      // byte-identical generated sources recompile on every run — and
-      // streaming replays generate per-batch sources (watermark values
-      // are literal-embedded in stateful operators' predicates), which
-      // a warm cache turns into once-per-session compiles because the
-      // fixture's watermark sequence is deterministic. Probe measured
-      // 12–20 compiles per WARM replay with the default cache; tasks
-      // of a stage serialize behind the compile (run≈900ms/task,
-      // cpu≈30ms/task on one-row sentinel batches).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // Stable executor classloader across streaming query runs: with
-      // artifact isolation ON (the Spark 4 default) every streaming
-      // query RUN gets its own ExecutorClassLoader, and the codegen
-      // cache keys on (classloader, source) — so every replay recompiled
-      // every generated class (probe: 12-35 Janino compiles, 0.4-1.9 s,
-      // per WARM replay; identical sources, different loader). The
-      // harness loads no session artifacts, so isolation buys nothing.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // Raw (un-checksummed) local fs for the Hadoop FileContext API —
-      // what Spark's CheckpointFileManager uses for streaming WAL /
-      // offset / state-delta writes: the default LocalFs is checksum-
-      // wrapped and writes a .crc sidecar per file per micro-batch,
-      // which nothing here ever reads back (scratch checkpoints are
-      // deleted at stop). Probe A/B (min-of-5): s15 1.96→1.60 s,
-      // s11 3.57→3.22 s, others ≤ noise. The FileSystem-API default
-      // (LocalFileSystem) must stay: RocksDBFileManager hard-casts
-      // FileSystem.getLocal to LocalFileSystem (zip/copyFromLocalFile).
-      // GraftRawLocalFs is also fork-free on the checkpoint path: every
-      // checkpoint file is a temp file renamed into place, and stock
-      // Hadoop asks the link status of both rename sides with a shell
-      // `readlink` (about 20 forks of this JVM per detector
-      // micro-batch; see graft.sources.NioLocalFs).
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS",
-          "graft.sources.GraftRawLocalFs"))
-      // Fork-free local FS for the FileSystem API too (r15): with no
-      // libhadoop in the image, stock local FS shell-execs a chmod —
-      // a fork+exec of this multi-GB JVM — for EVERY file/dir create
-      // (jstack: 10-22 of 32 executor threads inside forkAndExec
-      // during replay writes). graft.sources.NioLocalFs documents the
-      // finding; SPARK_GRAFT_LOCAL_FS=org.apache.hadoop.fs.LocalFileSystem
-      // restores stock behavior for A/B.
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.GraftLocalFileSystem"))
-      // Shuffle/spill scratch in a per-process tmpfs dir when tmpfs has
-      // room (see TempDirs.sparkLocalDir):
-      // jstack'd replay benches spent most RUNNABLE executor samples in
-      // BypassMergeSortShuffleWriter file writes+concat against the
-      // default /tmp disk. SPARK_GRAFT_LOCAL_DIR overrides for A/B.
-      .config("spark.local.dir", TempDirs.sparkLocalDir())
-      // Replays stop their queries and unload state stores explicitly;
-      // a short maintenance interval is a second line of defense so a
-      // terminated replay's providers never sit loaded for the default
-      // 60 s while later queries run.
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => }
     try { Tables.events(spark, sfDir).count() } catch { case _: Throwable => }
@@ -159,7 +51,7 @@ object Bench {
       spark.sharedState.cacheManager.clearCache()
     } catch { case _: Throwable => }
     // FIXTURE CACHE (protocol change, recorded as "fixture_cache" in
-    // the artifact like gc_nudge): persist + materialize the ten base
+    // the artifact): persist + materialize the ten base
     // table scans at sfDir once per session. ~70 of the 141 rows are
     // sub-second and pay Spark's per-job floor mostly in scan setup
     // (file listing, footer decode, vectorized-reader init) on inputs
@@ -275,9 +167,8 @@ object Bench {
       // 3-6x penalty that no code of their own causes (x36 measured
       // 3.5s solo vs 19.9s late in a 46-query round). The nudge runs
       // AFTER this run's sample is recorded, so it never inflates a
-      // measured time. Gate: SPARK_GRAFT_BENCH_GC=0 disables (A/B
-      // measurement of the nudge's own cost).
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") != "0") System.gc()
+      // measured time.
+      System.gc()
     }
     // Estimator: 2nd-smallest of the interleaved samples. The host's
     // contamination is strictly ONE-SIDED (co-tenant stall windows only
@@ -369,17 +260,11 @@ object Bench {
     // Tail keys deliberately REPEAT the headline numbers: the driver
     // archives only the last ~2000 chars of stdout, which preserves the
     // end of the line but can truncate the front where "value" lives —
-    // spark_total makes the artifact self-contained either way. The
-    // gc-nudge gate is recorded so artifacts from the two measurement
-    // regimes (with/without the between-sample System.gc) stay
-    // distinguishable after the fact.
-    val gcNudge = if (sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "1") != "0") 1 else 0
-    val x64Frontier = if (operators.Propagate.envFrontier) 1 else 0
+    // spark_total makes the artifact self-contained either way.
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""duckdb":$duckQs,"duckdb_total":$duckTotal,"spark_total":$total,""" +
-      s""""gc_nudge":$gcNudge,"fixture_cache":$fixtureCache,""" +
-      s""""x64_frontier":$x64Frontier,""" +
+      s""""fixture_cache":$fixtureCache,""" +
       s""""canary":{"sec":$canarySec,"attempts":$canaryAttempts,"sla":$canarySla},""" +
       s""""failed":$failed,"sf":"$sfDir"}"""
     // File mirror first, then stdout last line, then flush: the driver can

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Capped-LSH rehearsal main (round-7 verdict #5): times the four
   * output-quadratic banded operators (x04/x05/x30/x37) WITH a
@@ -11,27 +11,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * cap actually buys (time) and costs (recall) in the committed
   * artifact. Prints ONE JSON line, mirrored to capped_result.json.
   *
-  * Cap default 64 (override SPARK_GRAFT_BAND_CAP): band buckets keep
-  * their 64 smallest member ids, bounding candidates per bucket at
-  * C(64,2) regardless of how many replicas share a bucket. */
+  * Cap 64: band buckets keep their 64 smallest member ids, bounding
+  * candidates per bucket at C(64,2) regardless of how many replicas
+  * share a bucket. */
 object CappedBench {
+  private val Cap = 64
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sfbig")
-    val cap = sys.env.getOrElse("SPARK_GRAFT_BAND_CAP", "64").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     import graft.operators.Dedup
 
     def docs = Tables.documents(spark, sfDir)
@@ -40,16 +29,16 @@ object CappedBench {
     // (name, capped plan, uncapped plan, top-k?)
     val entries: Seq[(String, () => DataFrame, () => DataFrame, Boolean)] = Seq(
       ("x04_dedup_chargram",
-        () => Dedup.nearDupCharPairs(docs, maxBandBucket = Some(cap)),
+        () => Dedup.nearDupCharPairs(docs, maxBandBucket = Some(Cap)),
         () => Dedup.nearDupCharPairs(docs), false),
       ("x05_dedup_embed",
-        () => Dedup.embeddingDupPairs(emb, maxBandBucket = Some(cap)),
+        () => Dedup.embeddingDupPairs(emb, maxBandBucket = Some(Cap)),
         () => Dedup.embeddingDupPairs(emb), false),
       ("x30_containment",
-        () => Dedup.containmentPairs(docs, maxBandBucket = Some(cap)),
+        () => Dedup.containmentPairs(docs, maxBandBucket = Some(Cap)),
         () => Dedup.containmentPairs(docs), false),
       ("x37_closest_pairs",
-        () => Dedup.closestPairs(emb, maxBandBucket = Some(cap)),
+        () => Dedup.closestPairs(emb, maxBandBucket = Some(Cap)),
         () => Dedup.closestPairs(emb), true))
 
     def time(f: () => DataFrame): (Double, Long) = {
@@ -82,9 +71,9 @@ object CappedBench {
           // CandidateCapSpec pins the subset property)
           if (uN == 0) 1.0 else cN.toDouble / uN
         }
-      System.err.println(f"CAPPED $name cap=$cap capped=${cSec}%.2fs " +
+      System.err.println(f"CAPPED $name cap=$Cap capped=${cSec}%.2fs " +
         f"($cN rows) uncapped=${uSec}%.2fs ($uN rows) recall=${recall}%.4f")
-      s""""$name":{"cap":$cap,"capped_sec":$cSec,"capped_rows":$cN,""" +
+      s""""$name":{"cap":$Cap,"capped_sec":$cSec,"capped_rows":$cN,""" +
         s""""uncapped_sec":$uSec,"uncapped_rows":$uN,"recall":$recall}"""
     }
     val line = rows.mkString("{", ",", s""","sf":"$sfDir"}""")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Structural plan audit: for every batch query in the driver contract,
   * count the physical-plan features that decide 100 TB behavior —
   * shuffle exchanges, broadcast exchanges, whole-stage-codegen spans,
@@ -99,18 +97,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      // static plans: AQE's pre-execution explain hides codegen stage
-      // markers and can re-plan exchanges at runtime — the audit wants
-      // the deterministic Catalyst output
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
+    // static plans: AQE's pre-execution explain hides codegen stage
+    // markers and can re-plan exchanges at runtime — the audit wants
+    // the deterministic Catalyst output
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val rows = SparkEntry.queries.toSeq.sortBy(_._1)
       // every streaming replay (s01..s11): their gated result is a

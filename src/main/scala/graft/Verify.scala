@@ -1,62 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // See Bench: AQE byte-sizing applies to cached-plan builds too.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // See Bench: plan-description strings for listener events are
-      // built per execution on the main thread; cap them (nothing here
-      // reads them).
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      // See Bench: keep high-cardinality object aggregations (every
-      // collect_set / TypedImperativeAggregate) hash-based instead of
-      // the default fall-back-to-sort at 128 keys. Execution strategy
-      // only — results are identical either way.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "1048576"))
-      // See Bench: generated-class cache sized for a 143-query session
-      // (static conf; the 100-entry default thrashes and recompiles).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      // Stable executor classloader across streaming query runs: with
-      // artifact isolation ON (the Spark 4 default) every streaming
-      // query RUN gets its own ExecutorClassLoader, and the codegen
-      // cache keys on (classloader, source) — so every replay recompiled
-      // every generated class (probe: 12-35 Janino compiles, 0.4-1.9 s,
-      // per WARM replay; identical sources, different loader). The
-      // harness loads no session artifacts, so isolation buys nothing.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // See Bench + graft.sources.NioLocalFs: fork-free local FS on
-      // both Hadoop APIs (no libhadoop => stock local FS shell-execs a
-      // chmod per file/dir create), FileSystem-API type still
-      // LocalFileSystem (RocksDBFileManager hard-casts to it).
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS",
-          "graft.sources.GraftRawLocalFs"))
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.GraftLocalFileSystem"))
-      // See Bench: shuffle/spill scratch on tmpfs.
-      .config("spark.local.dir", TempDirs.sparkLocalDir())
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.start()
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter for local iteration (same contract
     // as the bench's SPARK_GRAFT_BENCH_ONLY); the driver sets nothing

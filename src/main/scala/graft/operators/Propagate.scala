@@ -51,7 +51,7 @@ object Propagate {
     * (which would otherwise surface as a NULL score and let NULL
     * ordering decide the top-N). PropagateSpec pins both properties. */
   def qualityPropagate(scores: DataFrame, pairs: DataFrame,
-      iters: Int = Iters, frontier: Boolean = true): DataFrame = {
+      iters: Int = Iters): DataFrame = {
     val base = scores
       .select(col("id").cast("long").as("id"), col("s0").cast("long").as("s0"))
       .localCheckpoint(eager = false)
@@ -75,8 +75,9 @@ object Propagate {
     // sums forward and joins the edge list against the CHANGED nodes
     // only (Δs ≠ 0), adding Σ_{u changed} Δs(u) to each neighbor's
     // carried sum. Long addition is exact and order-independent, so
-    // the carried sum equals the full recomputation bit-for-bit
-    // (PropagateSpec pins the equality) — but round i's shuffle is
+    // the carried sum equals a full recomputation bit-for-bit
+    // (PropagateSpec pins the scores against the driver-side
+    // recurrence) — but round i's shuffle is
     // O(|E restricted to the frontier|), and integer floor-division
     // scores stabilize fast: on the smoothing fixture most nodes stop
     // changing after round 1, which is what cut the 100×-rehearsal
@@ -90,16 +91,6 @@ object Propagate {
           .otherwise(expr("(15 * s0 + 85 * (sum_s div deg)) div 100"))
           .as("s"))
       .localCheckpoint(eager = false)
-    if (!frontier) {
-      // full-recompute loop (A/B reference): one edge join per round
-      var cur = base.select(col("id"), col("s0"), col("s0").as("s"))
-      for (_ <- 1 to iters) {
-        val nb = edges.join(cur.select(col("id").as("u"), col("s")), Seq("u"))
-          .groupBy("v").agg(sum(col("s")).as("sum_s"))
-        cur = scoreOf(nb)
-      }
-      return cur
-    }
     var cur = base.select(col("id"), col("s0"), col("s0").as("s"))
       .localCheckpoint(eager = false)
     var sums = edges.join(cur.select(col("id").as("u"), col("s")), Seq("u"))
@@ -127,15 +118,6 @@ object Propagate {
   }
 
   // ---------------------------------------------------------------- x64
-  /** The frontier/full-join A/B switch for the HARNESS entry below —
-    * the library operator takes it as an explicit parameter (default
-    * frontier); only the benchmark entry point consults the ambient
-    * environment, and graft.Bench records the value in the artifact
-    * line ("x64_frontier") so two artifacts measured under different
-    * settings stay distinguishable after the fact. */
-  def envFrontier: Boolean =
-    sys.env.getOrElse("GRAFT_X64_FRONTIER", "1") != "0"
-
   /** x64 — top-N docs after propagating x09's quality score over x02's
     * near-dup graph (shared relations: the score formula and the LSH
     * pair derivation are the gated x09/x02 code and SQL verbatim, so
@@ -144,8 +126,7 @@ object Propagate {
     val docs = Tables.documents(s, d)
     val scores = TextOps.x09(s, d)
       .select(col("doc_id").as("id"), col("score_u").as("s0"))
-    qualityPropagate(scores, Dedup.nearDupWordPairs(docs),
-        frontier = envFrontier)
+    qualityPropagate(scores, Dedup.nearDupWordPairs(docs))
       .select(col("id").as("doc_id"), col("s0").as("s0_u"), col("s").as("s_u"))
       .orderBy(col("s_u").desc, col("doc_id"))
       .limit(TopN)

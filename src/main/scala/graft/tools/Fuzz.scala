@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Verify}
+import graft.{GraftSession, SparkEntry, Verify}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -293,16 +293,7 @@ object Fuzz {
       case _ => ()
     }
     val Array(lo, hi, outBase) = args
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     for (seed <- lo.toLong to hi.toLong) {
       val dir = s"$outBase/seed$seed"
       writeSeed(spark, seed, dir)
@@ -324,13 +315,7 @@ object Fuzz {
   }
 
   private def degenerate(dir: String, rows: Int): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
     writeSeed(spark, seed = 424242L, dir, forcedRows = Some(rows))
     println(s"[fuzz] degenerate fixture ($rows rows/table) at $dir")
     spark.stop()

@@ -1,50 +1,19 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 import org.apache.spark.sql.SparkSession
 
-/** Per-query measurement probe with the EXACT Bench session confs
-  * (shuffle partitions from $SPARK_GRAFT_CPUS, AQE bytes-first
-  * coalescing, codegen cache, artifact isolation off, RawLocalFs, OHA
-  * threshold) so a plan or timing read here is the plan the bench
-  * executes. For each name in $SPARK_GRAFT_PROBE_ONLY (comma-separated):
-  * warm once on sf0.001, then run N timed counts at $SPARK_GRAFT_SF_DIR
-  * and write the post-run `explain("formatted")` (final AQE plan) to
+/** Per-query measurement probe on the engine session ([[GraftSession]]),
+  * so a plan or timing read here is the plan the bench executes. For
+  * each name in $SPARK_GRAFT_PROBE_ONLY (comma-separated): warm once
+  * on sf0.001, then run N timed counts at $SPARK_GRAFT_SF_DIR and write
+  * the post-run `explain("formatted")` (final AQE plan) to
   * $SPARK_GRAFT_PROBE_OUT/<name>_<tag>.txt when that env is set.
   * SPARK_GRAFT_PROBE_CACHE=1 replicates the bench fixture cache. */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.ui.retainedExecutions", "4")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "1048576"))
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS",
-          "graft.sources.GraftRawLocalFs"))
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.GraftLocalFileSystem"))
-      .config("spark.local.dir", graft.TempDirs.sparkLocalDir())
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "15s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     val names = sys.env.getOrElse("SPARK_GRAFT_PROBE_ONLY", "q12_multi_agg")
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq

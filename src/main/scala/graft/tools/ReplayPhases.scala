@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables, TempDirs}
+import graft.{GraftSession, SparkEntry, Tables, TempDirs}
 import graft.operators.{Sessions, StreamingQueries}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
@@ -52,23 +51,7 @@ object ReplayPhases {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_AFS",
-          "graft.sources.GraftRawLocalFs"))
-      .config("spark.hadoop.fs.file.impl",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_FS",
-          "graft.sources.GraftLocalFileSystem"))
-      .config("spark.local.dir", graft.TempDirs.sparkLocalDir())
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1048576")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.start()
 
     val ph = new Phases
     spark.streams.addListener(new StreamingQueryListener {

@@ -3,18 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for suites (one per suite via lazy val). */
+/** Shared local session for suites: the engine's own
+  * ([[GraftSession]]), so the suite tests the session that ships. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // stable executor classloader -> codegen cache hits across the
-    // suite's many streaming query runs (see Bench's conf comment)
-    .config("spark.sql.artifact.isolation.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.start()
 
   val sf: String = "/root/testdata/sf0.001"
 }

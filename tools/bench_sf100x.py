@@ -115,14 +115,14 @@ QUERIES = [
     # this near-dup replica fixture its input edge relation is
     # output-quadratic BY FIXTURE CONSTRUCTION — every replica is a
     # deliberate near-dup of its original, so each source doc sits in a
-    # ~replicas-clique and |E| grows ~replicas^2 (measured by
-    # graft.tools.EdgeCount: 256 -> 13,206 -> 1,195,136 pairs at
-    # 1x/10x/100x, i.e. 4,668x edges for 100x docs). That puts x64 in
-    # the same class as the x74/x76/x77 exemptions (pair-relation
+    # ~replicas-clique and |E| grows ~replicas^2 (256 -> 13,206 ->
+    # 1,195,136 pairs at 1x/10x/100x, i.e. 4,668x edges for 100x docs;
+    # the edge counts are recorded in BENCH_x64_linear.json). That puts
+    # x64 in the same class as the x74/x76/x77 exemptions (pair-relation
     # rows). Its genuine 100x scaling is rehearsed instead on the
     # LINEAR-edge fixture (build_sfbig.py mode=distinct, replicas are
-    # not near-dups of each other) — see BENCH_x64_linear.json and
-    # graft.tools.X64Linear.
+    # not near-dups of each other) — its timings are in
+    # BENCH_x64_linear.json too.
     "x69_corpus_diff", "x70_ann_pq",
     "x71_bpe_deep",
     # round-10 second push: the streaming funnel over the genuinely-100x
