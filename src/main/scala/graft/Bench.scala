@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line {"metric":...} as the LAST stdout line (and
   * mirrors it to bench_result.json) so the driver can parse it even if
@@ -64,15 +62,7 @@ object Bench {
     // protocol for A/B.
     val fixtureCache =
       if (sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "1") != "0") 1 else 0
-    if (fixtureCache == 1) {
-      val tables = Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-        Tables.region, Tables.nation, Tables.customer, Tables.supplier,
-        Tables.part, Tables.orders, Tables.lineitem, Tables.events,
-        Tables.documents, Tables.embeddings)
-      tables.foreach { t =>
-        try t(spark, sfDir).persist().count() catch { case _: Throwable => }
-      }
-    }
+    if (fixtureCache == 1) Tables.cacheAll(spark, sfDir)
     // QUIET-WINDOW CANARY: this box injects multi-second co-tenant
     // stall windows (a trivial scan has measured 0.14s and 4.15s in one
     // session). Gate the timed loop on a trivial-scan canary meeting
@@ -220,23 +210,11 @@ object Bench {
       val script = new java.io.File("tools/time_oracle.py")
       if (!script.isFile || oracleRuns <= 0) Map.empty
       else {
-        def jq(s: String): String = "\"" + s.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val sel = selected.map(_._1).toSet
-        val oracleJson = SparkEntry.oracleSql.view
-          .filterKeys(sel.contains).toMap
-          .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
-          .mkString("{", ",", "}")
         val in = java.nio.file.Files.createTempFile("graft_oracle_", ".json")
         val out = java.nio.file.Files.createTempFile("graft_ducktimes_", ".json")
-        java.nio.file.Files.writeString(in, oracleJson)
+        Verify.writeOracleJson(
+          SparkEntry.oracleSql.view.filterKeys(sel.contains).toMap, in.toString)
         import scala.sys.process._
         val code = Process(Seq("python3", script.getAbsolutePath, sfDir,
             in.toString, oracleRuns.toString, out.toString))

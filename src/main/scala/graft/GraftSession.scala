@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * confs. The only settings left to the deployment are the core count
   * (`SPARK_GRAFT_CPUS`, else the JVM's processor count), the heap
   * (the JVM's `-Xmx`, see `build.sbt`) and the scratch directory
-  * (`SPARK_GRAFT_LOCAL_DIR`, see [[TempDirs.sparkLocalDir]]).
+  * (Spark's `SPARK_LOCAL_DIRS`, see [[TempDirs.sparkLocalDir]]).
   *
   * Nothing a query builder runs may touch this object: its first use
   * costs session start-up, which belongs to the caller, not to a query.

@@ -66,8 +66,13 @@ private[graft] object TempDirs {
     * the directory is deleted at exit so it never pins RAM past the
     * run (a killed JVM still leaves it). Production clusters point
     * spark.local.dir at their fast local devices — this picks this
-    * box's. SPARK_GRAFT_LOCAL_DIR overrides (e.g. back to /tmp for
-    * A/B). */
+    * box's. Spark's own `SPARK_LOCAL_DIRS` wins over `spark.local.dir`,
+    * so when it is set it is returned and no directory is made. */
   def sparkLocalDir(): String =
-    sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", processLocalDir)
+    localDirFor(sys.env.get("SPARK_LOCAL_DIRS"), processLocalDir)
+
+  /** `SPARK_LOCAL_DIRS` when set, else `fallback` — evaluated only then. */
+  private[graft] def localDirFor(sparkLocalDirs: Option[String],
+      fallback: => String): String =
+    sparkLocalDirs.getOrElse(fallback)
 }

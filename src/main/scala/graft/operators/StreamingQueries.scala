@@ -268,13 +268,17 @@ object StreamingQueries {
 
   /** s01 — the E1 detector replayed over the fixture. Timeout = 24h
     * (same knob as Q15). */
-  def s01(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val timeoutMs = Relational.TimeoutMs
-    val stream = replayEvents(s, d)
-    runToSink(s, UndeliveredDetector.alerts(stream, timeoutMs).toDF(), "append")
+  def s01(s: SparkSession, d: String): DataFrame =
+    detectorReplay(s, d, UndeliveredDetector.alerts(_, _))
+
+  /** One replay body for both detector builds: `detector` over the
+    * fixture replay, run to completion under `confs`. */
+  private def detectorReplay(s: SparkSession, d: String,
+      detector: (Dataset[MessageStatus], Long) => Dataset[UndeliveredAlert],
+      confs: (String, String)*): DataFrame =
+    runToSink(s, detector(replayEvents(s, d), Relational.TimeoutMs).toDF(),
+        "append", confs: _*)
       .filter(col("messageId") =!= "sentinel")
-  }
 
   val s01Sql: String =
     s"""SELECT CAST(user_id AS VARCHAR) AS messageId,
@@ -298,13 +302,8 @@ object StreamingQueries {
     * perf record, not just a unit test. The provider conf is set for
     * this query and restored after (s01 stays on the default
     * HDFS-backed provider — the two detectors exercise both stores). */
-  def s01Tws(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val stream = replayEvents(s, d)
-    runToSink(s, TwsDetector.alerts(stream, Relational.TimeoutMs).toDF(),
-        "append", RocksDbProvider)
-      .filter(col("messageId") =!= "sentinel")
-  }
+  def s01Tws(s: SparkSession, d: String): DataFrame =
+    detectorReplay(s, d, TwsDetector.alerts(_, _), RocksDbProvider)
 
   /** s02 — the E2 windowed monitoring view as a real FILE-SOURCE
     * streaming query in APPEND mode: each (window, carrier, status)

@@ -1,15 +1,14 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
 /** Spark-4-native variant of the E1 detector built on
   * `transformWithState` (StatefulProcessor + named ValueState +
-  * explicit event-time timers, RocksDB state store). Same semantics as
-  * [[UndeliveredDetector]] — the flatMapGroupsWithState build is kept
-  * for HDFS-state-store deployments; this is the forward path
-  * (state schema evolution, TTL, multiple state variables).
+  * explicit event-time timers, RocksDB state store). Same transition as
+  * [[UndeliveredDetector]] ([[MsgState]]) — the flatMapGroupsWithState
+  * build is kept for HDFS-state-store deployments; this is the forward
+  * path (state schema evolution, TTL, multiple state variables).
   */
 object TwsDetector {
 
@@ -24,49 +23,27 @@ object TwsDetector {
 
     override def handleInputRows(key: String, rows: Iterator[MessageStatus],
         timerValues: TimerValues): Iterator[UndeliveredAlert] = {
-      val evs = rows.toSeq
       val prev = if (state.exists()) Some(state.get()) else None
-      def mergedMin(cur: Option[Long], st: String): Option[Long] = {
-        val ts = evs.filter(_.status == st).map(_.timestamp)
-        (cur ++ ts).reduceOption(_ min _)
-      }
-      val head = evs.head
-      val merged = MsgState(
-        prev.map(_.phoneNumber).getOrElse(head.phoneNumber),
-        prev.map(_.carrier).getOrElse(head.carrier),
-        mergedMin(prev.flatMap(_.firstSent), "sent"),
-        mergedMin(prev.flatMap(_.firstDelivered), "delivered"))
-      def retime(t: Long): Unit = {
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(t)
-      }
-      merged.firstSent match {
-        case Some(t0) =>
-          val deadline = t0 + timeoutMs
-          if (merged.firstDelivered.exists(_ <= deadline)) {
-            state.clear()
-            getHandle.listTimers().foreach(getHandle.deleteTimer)
-          } else {
-            state.update(merged)
-            retime(deadline)
-          }
-        case None =>
-          state.update(merged)
-          merged.firstDelivered.foreach(t => retime(t + timeoutMs))
-      }
+      keep(MsgState.afterEvents(prev, rows, timeoutMs))
       Iterator.empty
     }
 
     override def handleExpiredTimer(key: String, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[UndeliveredAlert] = {
       if (!state.exists()) return Iterator.empty
-      val p = state.get()
-      state.clear()
-      p.firstSent match {
-        case Some(t0) if !p.firstDelivered.exists(_ <= t0 + timeoutMs) =>
-          Iterator.single(UndeliveredAlert(
-            key, p.phoneNumber, p.carrier, t0, t0 + timeoutMs))
-        case _ => Iterator.empty
+      val (alert, next) = MsgState.expire(key, state.get(), timeoutMs)
+      keep(next)
+      alert.iterator
+    }
+
+    /** The key's one state row and one timer, or neither. */
+    private def keep(next: Option[(MsgState, Long)]): Unit = {
+      getHandle.listTimers().foreach(getHandle.deleteTimer)
+      next match {
+        case Some((s, timer)) =>
+          state.update(s)
+          getHandle.registerTimer(timer)
+        case None => state.clear()
       }
     }
   }
@@ -77,14 +54,9 @@ object TwsDetector {
     */
   def alerts(ds: Dataset[MessageStatus], timeoutMs: Long,
       watermarkDelay: String = "1 minute"): Dataset[UndeliveredAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[MessageStatus]
-      .groupByKey(_.messageId)
+    import ds.sparkSession.implicits._
+    UndeliveredDetector.keyed(ds, watermarkDelay)
       .transformWithState(new Processor(timeoutMs),
-        TimeMode.EventTime(), OutputMode.Append(),
-        implicitly[org.apache.spark.sql.Encoder[UndeliveredAlert]])
+        TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -9,78 +9,52 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * README.md:31-35; undelivered-message-alert/README.md:150-156 — the
   * reference declares it in prose but never implements it).
   *
-  * Semantics (identical to the relational twin [[alertsBatch]]):
-  *  - first `sent` for a key starts the clock: deadline = firstSent + timeout
-  *  - repeated `sent` heartbeats are no-ops (state stays one record/key)
-  *  - a `delivered` with timestamp <= deadline resolves the key: no alert
-  *  - a `delivered` AFTER the deadline does not cancel the alert (the
-  *    message was late — that is exactly the alert condition)
-  *  - when the event-time watermark passes the deadline the alert fires
-  *    and state is dropped
+  * Semantics: the transition in [[MsgState]], shared with
+  * [[TwsDetector]]; the relational twin is [[alertsBatch]].
   *
-  * Scale: state is bounded at one MsgState per in-flight key and is
-  * hash-partitioned by messageId across executors; watermark-driven
-  * timeouts guarantee eviction even when `delivered` never arrives.
+  * Scale: state is bounded at one MsgState per in-flight (or recently
+  * alerted) key and is hash-partitioned by messageId across executors;
+  * watermark-driven timeouts guarantee eviction even when `delivered`
+  * never arrives.
   */
 object UndeliveredDetector {
 
   /** Streaming detector over a MessageStatus stream. */
   def alerts(ds: Dataset[MessageStatus], timeoutMs: Long,
       watermarkDelay: String = "1 minute"): Dataset[UndeliveredAlert] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.withColumn("eventTime", timestamp_millis(col("timestamp")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[MessageStatus]
-      .groupByKey(_.messageId)
+    import ds.sparkSession.implicits._
+    keyed(ds, watermarkDelay)
       .flatMapGroupsWithState[MsgState, UndeliveredAlert](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update(timeoutMs))
   }
 
-  /** State transition for one key and one micro-batch's events. */
+  /** The wiring both builds share: event time from `timestamp`, the
+    * watermark, and the events grouped by the `messageId` column (no key
+    * lambda, so the stateful exchange hashes the column itself). */
+  private[streaming] def keyed(ds: Dataset[MessageStatus], watermarkDelay: String)
+      : KeyValueGroupedDataset[String, MessageStatus] = {
+    import ds.sparkSession.implicits._
+    ds.withColumn("eventTime", timestamp_millis(col("timestamp")))
+      .withWatermark("eventTime", watermarkDelay)
+      .groupBy(col("messageId")).as[String, MessageStatus]
+  }
+
+  /** [[MsgState]]'s transition applied to `GroupState`, for one key and
+    * one micro-batch's events (or its timeout). */
   private[streaming] def update(timeoutMs: Long)(
       messageId: String,
       events: Iterator[MessageStatus],
       state: GroupState[MsgState]): Iterator[UndeliveredAlert] = {
-    if (state.hasTimedOut) {
-      val p = state.get
-      state.remove()
-      p.firstSent match {
-        case Some(t0) if !p.firstDelivered.exists(_ <= t0 + timeoutMs) =>
-          Iterator.single(UndeliveredAlert(
-            messageId, p.phoneNumber, p.carrier, t0, t0 + timeoutMs))
-        case _ => Iterator.empty // GC of a delivered-only orphan
-      }
-    } else {
-      val evs = events.toSeq
-      def mergedMin(cur: Option[Long], st: String): Option[Long] = {
-        val ts = evs.filter(_.status == st).map(_.timestamp)
-        (cur ++ ts).reduceOption(_ min _)
-      }
-      val prev = state.getOption
-      val head = evs.head
-      val merged = MsgState(
-        prev.map(_.phoneNumber).getOrElse(head.phoneNumber),
-        prev.map(_.carrier).getOrElse(head.carrier),
-        mergedMin(prev.flatMap(_.firstSent), "sent"),
-        mergedMin(prev.flatMap(_.firstDelivered), "delivered"))
-      merged.firstSent match {
-        case Some(t0) =>
-          val deadline = t0 + timeoutMs
-          if (merged.firstDelivered.exists(_ <= deadline)) {
-            if (state.exists) state.remove() // resolved in time
-          } else {
-            state.update(merged) // pending (or late-delivered): alert at deadline
-            state.setTimeoutTimestamp(clampToWatermark(state, deadline))
-          }
-        case None =>
-          // delivered before its sent was seen: hold, GC after timeout
-          state.update(merged)
-          merged.firstDelivered.foreach(t =>
-            state.setTimeoutTimestamp(clampToWatermark(state, t + timeoutMs)))
-      }
-      Iterator.empty
+    val (alert, keep) =
+      if (state.hasTimedOut) MsgState.expire(messageId, state.get, timeoutMs)
+      else (None, MsgState.afterEvents(state.getOption, events, timeoutMs))
+    keep match {
+      case Some((s, timer)) =>
+        state.update(s)
+        state.setTimeoutTimestamp(clampToWatermark(state, timer))
+      case None => if (state.exists) state.remove()
     }
+    alert.iterator
   }
 
   /** GroupState.setTimeoutTimestamp throws when the timestamp is at or

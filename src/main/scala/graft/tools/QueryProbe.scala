@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{GraftSession, SparkEntry}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query measurement probe on the engine session ([[GraftSession]]),
   * so a plan or timing read here is the plan the bench executes. For
@@ -9,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * on sf0.001, then run N timed counts at $SPARK_GRAFT_SF_DIR and write
   * the post-run `explain("formatted")` (final AQE plan) to
   * $SPARK_GRAFT_PROBE_OUT/<name>_<tag>.txt when that env is set.
-  * SPARK_GRAFT_PROBE_CACHE=1 replicates the bench fixture cache. */
+  * The bench's fixture cache is replicated under the bench's own
+  * switch (SPARK_GRAFT_BENCH_CACHE=0 turns it off). */
 object QueryProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -21,16 +21,8 @@ object QueryProbe {
     val outDir = sys.env.get("SPARK_GRAFT_PROBE_OUT")
     val tag = sys.env.getOrElse("SPARK_GRAFT_PROBE_TAG", "before")
 
-    if (sys.env.getOrElse("SPARK_GRAFT_PROBE_CACHE", "1") != "0") {
-      import graft.Tables
-      val tables = Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
-        Tables.region, Tables.nation, Tables.customer, Tables.supplier,
-        Tables.part, Tables.orders, Tables.lineitem, Tables.events,
-        Tables.documents, Tables.embeddings)
-      tables.foreach { t =>
-        try t(spark, sfDir).persist().count() catch { case _: Throwable => }
-      }
-    }
+    if (sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "1") != "0")
+      graft.Tables.cacheAll(spark, sfDir)
 
     for (name <- names) {
       val fn = SparkEntry.queries(name)

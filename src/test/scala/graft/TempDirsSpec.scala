@@ -4,8 +4,9 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Where Spark's scratch directory goes: a per-process directory on
-  * tmpfs when tmpfs has room, else under the JVM temp dir. */
+/** Where Spark's scratch directory goes: Spark's own `SPARK_LOCAL_DIRS`
+  * when set, else a per-process directory on tmpfs when tmpfs has room,
+  * else under the JVM temp dir. */
 class TempDirsSpec extends AnyFunSuite {
 
   private val tmpdir = new File(System.getProperty("java.io.tmpdir"))
@@ -32,11 +33,17 @@ class TempDirsSpec extends AnyFunSuite {
       assert(d.getName.startsWith(s"graft-local-${ProcessHandle.current.pid}-"))
       assert(TempDirs.processDir(root) != d, "two calls share one directory")
     } finally TempDirs.deleteRecursively(root)
-    if (!sys.env.contains("SPARK_GRAFT_LOCAL_DIR")) {
+    if (!sys.env.contains("SPARK_LOCAL_DIRS")) {
       val local = new File(TempDirs.sparkLocalDir())
       assert(local.isDirectory)
       assert(Set(new File("/dev/shm"), tmpdir).contains(local.getParentFile))
       assert(TempDirs.sparkLocalDir() == local.getAbsolutePath)
     }
+  }
+
+  test("SPARK_LOCAL_DIRS, when set, is the local dir and nothing is made") {
+    assert(TempDirs.localDirFor(Some("/a,/b"),
+      fail("the per-process dir was made although SPARK_LOCAL_DIRS is set")) == "/a,/b")
+    assert(TempDirs.localDirFor(None, "/fallback") == "/fallback")
   }
 }
