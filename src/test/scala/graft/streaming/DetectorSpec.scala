@@ -1,8 +1,5 @@
 package graft.streaming
 
-import graft.SparkSpec
-import graft.operators.Sessions
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -10,47 +7,10 @@ import org.scalacheck.rng.Seed
 /** Transcript tests for the E1 detector (scenarios from FIXTURES.md A3,
   * timings from the reference's Config: sent -> delivered at 30s/180s,
   * heartbeats every 30s, 5% never delivered). Every scenario runs on
-  * both builds — flatMapGroupsWithState on the default state store and
-  * transformWithState on RocksDB — through one [[run]]. */
-class DetectorSpec extends SparkSpec {
+  * both builds through [[DetectorReplay.run]]. */
+class DetectorSpec extends DetectorReplay {
 
-  private val T0 = 1700000000000L
-  private val Timeout = 120000L // 2 minutes, README's "configurable timeout"
   private val WatermarkDelay = 60000L // the detectors' default "1 minute"
-
-  private case class Build(name: String,
-      alerts: (Dataset[MessageStatus], Long) => Dataset[UndeliveredAlert],
-      confs: Seq[(String, String)])
-
-  private val Builds = Seq(
-    Build("flatMapGroupsWithState", UndeliveredDetector.alerts(_, _), Nil),
-    Build("transformWithState", TwsDetector.alerts(_, _),
-      Seq("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")))
-
-  /** Replay `batches` (one micro-batch each) through the real streaming
-    * path of `build`; two sentinel batches then push the watermark far
-    * enough that every timer fires. */
-  private def run(build: Build, batches: Seq[Seq[MessageStatus]])
-      : Seq[UndeliveredAlert] = Sessions.withConfs(spark, build.confs: _*) {
-    import spark.implicits._
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val src = MemoryStream[MessageStatus]
-    val qn = "det_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = build.alerts(src.toDS(), Timeout).writeStream
-      .format("memory").queryName(qn).outputMode("append").start()
-    try {
-      val s1 = MessageStatus("sentinel", "delivered", 0L, "none",
-        batches.flatten.map(_.timestamp).max + 10 * Timeout)
-      (batches :+ Seq(s1) :+ Seq(s1.copy(timestamp = s1.timestamp + 10 * Timeout)))
-        .foreach { b => src.addData(b); q.processAllAvailable() }
-      spark.table(qn).as[UndeliveredAlert].collect().toSeq
-        .filterNot(_.messageId == "sentinel")
-    } finally {
-      q.stop()
-      spark.catalog.dropTempView(qn)
-    }
-  }
 
   /** `check` on the alerts of each build, the transcript fed as one
     * micro-batch. */
@@ -172,16 +132,7 @@ class DetectorSpec extends SparkSpec {
   }
 
   test("streaming answer equals the batch twin on a generated stream") {
-    import spark.implicits._
-    for ((keys, seed) <- Seq((300L, 7L), (200L, 11L))) {
-      val transcript = Generator.batch(spark, keys, seed = seed)
-        .as[MessageStatus].collect().toSeq
-      val batch = UndeliveredDetector
-        .alertsBatch(transcript.toDS(), Timeout)
-        .collect().map(_.messageId).sorted.toSeq
-      assert(batch.nonEmpty) // ~5% never-delivered keys must alert
-      onBoth(transcript)(a => assert(a.map(_.messageId).sorted == batch, s"seed=$seed"))
-    }
+    assertMatchesBatchTwin(Builds, 300L, 7L)
   }
 
   test("MsgState.merge: associative, commutative on timing, split-invariant") {

@@ -1,60 +1,11 @@
 package graft.streaming
 
-import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-
-/** The transformWithState build must agree with the
-  * flatMapGroupsWithState build on identical input. */
-class TwsDetectorSpec extends SparkSpec {
-
-  private val Timeout = 120000L
-
-  private def run(events: Seq[MessageStatus]): Seq[UndeliveredAlert] = {
-    import spark.implicits._
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val src = MemoryStream[MessageStatus]
-    val qn = "tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val q = TwsDetector.alerts(src.toDS(), Timeout).writeStream
-      .format("memory").queryName(qn).outputMode("append").start()
-    try {
-      val maxTs = events.map(_.timestamp).max
-      src.addData(events)
-      q.processAllAvailable()
-      val s1 = MessageStatus("sentinel", "delivered", 0L, "none",
-        maxTs + 10 * Timeout)
-      src.addData(Seq(s1))
-      q.processAllAvailable()
-      src.addData(Seq(s1.copy(timestamp = s1.timestamp + 10 * Timeout)))
-      q.processAllAvailable()
-      spark.table(qn).as[UndeliveredAlert].collect().toSeq
-        .filterNot(_.messageId == "sentinel")
-    } finally {
-      q.stop()
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
+/** The transformWithState build against the batch twin on a second
+  * generated transcript (200 keys, seed 11); [[DetectorSpec]] runs both
+  * builds on the 300-key one. */
+class TwsDetectorSpec extends DetectorReplay {
 
   test("transformWithState build matches the batch twin on generated data") {
-    import spark.implicits._
-    val transcript = Generator.batch(spark, 200L, seed = 11L)
-      .as[MessageStatus].collect().toSeq
-    val tws = run(transcript).map(_.messageId).sorted
-    val batch = UndeliveredDetector
-      .alertsBatch(transcript.toDS(), Timeout)
-      .collect().map(_.messageId).sorted.toSeq
-    assert(tws == batch)
-    assert(tws.nonEmpty)
-  }
-
-  test("late delivered past deadline still alerts; in-time delivered does not") {
-    def sent(id: String, t: Long) = MessageStatus(id, "sent", 1L, "att", t)
-    def del(id: String, t: Long) = MessageStatus(id, "delivered", 1L, "att", t)
-    val t0 = 1700000000000L
-    val alerts = run(Seq(
-      sent("ok", t0), del("ok", t0 + 30000),
-      sent("late", t0), del("late", t0 + Timeout + 5000)))
-    assert(alerts.map(_.messageId) == Seq("late"))
+    assertMatchesBatchTwin(Seq(Tws), 200L, 11L)
   }
 }
