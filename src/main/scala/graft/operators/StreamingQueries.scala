@@ -372,18 +372,30 @@ object StreamingQueries {
     * interval join. */
   private[operators] val JoinBoundMs = 2 * 60 * 60 * 1000L
 
-  def s05(s: SparkSession, d: String): DataFrame = {
+  def s05(s: SparkSession, d: String): DataFrame = deliveryJoin(s, d, "inner")
+
+  /** The one body of s05 and s08: sent events interval-joined to the
+    * same key's deliveries within `JoinBoundMs`, as `joinType`.
+    *
+    * Watermark subtlety the inner join is insensitive to: each side's
+    * watermark node only sees rows passing its upstream filter, and
+    * s08's null emission waits on the GLOBAL (min) watermark — so the
+    * sentinel rows pass BOTH side filters, or the sent-side watermark
+    * would idle at the fixture's last event and the unmatched rows near
+    * the end of the fixture would never emit. The sentinels' own
+    * matches are dropped with the rest of their rows. */
+  private def deliveryJoin(s: SparkSession, d: String, joinType: String): DataFrame = {
     val base = replayEvents(s, d)
       .toDF()
       .withColumn("eventTime", timestamp_millis(col("timestamp")))
-    val sent = base.filter(col("status") === "sent")
+    val sent = base.filter(col("status") === "sent" || col("messageId") === "sentinel")
       .select(col("messageId"), col("eventTime").as("sentTime"))
       .withWatermark("sentTime", "1 minute")
     val dlv = base.filter(col("status") === "delivered")
       .select(col("messageId").as("d_id"), col("eventTime").as("dlvTime"))
       .withWatermark("dlvTime", "1 minute")
     val joined = AsOf.intervalJoin(sent, dlv, "messageId", "d_id",
-        "sentTime", "dlvTime", JoinBoundMs)
+        "sentTime", "dlvTime", JoinBoundMs, joinType)
       .select(col("messageId"),
         unix_millis(col("sentTime")).as("sentMs"),
         unix_millis(col("dlvTime")).as("deliveredMs"),
@@ -415,35 +427,9 @@ object StreamingQueries {
     * join instead of custom keyed state: the null-side rows ARE the
     * alerts. State stays bounded exactly as in s05 (both buffers evict
     * at the watermark); the only new machinery is the
-    * watermark-triggered null emission that inner joins never need.
-    *
-    * Watermark subtlety the inner join is insensitive to: each side's
-    * watermark node only sees rows passing its upstream filter, and
-    * null emission waits on the GLOBAL (min) watermark — so the
-    * sentinel rows must pass BOTH side filters, or the sent-side
-    * watermark would idle at the fixture's last event and the
-    * unmatched rows near the end of the fixture would never emit. */
-  def s08(s: SparkSession, d: String): DataFrame = {
-    val base = replayEvents(s, d)
-      .toDF()
-      .withColumn("eventTime", timestamp_millis(col("timestamp")))
-    val isSentinel = col("messageId") === "sentinel"
-    val sent = base.filter(col("status") === "sent" || isSentinel)
-      .select(col("messageId"), col("eventTime").as("sentTime"))
-      .withWatermark("sentTime", "1 minute")
-    val dlv = base.filter(col("status") === "delivered")
-      .select(col("messageId").as("d_id"), col("eventTime").as("dlvTime"))
-      .withWatermark("dlvTime", "1 minute")
-    val joined = AsOf.intervalJoin(sent, dlv, "messageId", "d_id",
-        "sentTime", "dlvTime", JoinBoundMs, "left_outer")
-      .select(col("messageId"),
-        unix_millis(col("sentTime")).as("sentMs"),
-        unix_millis(col("dlvTime")).as("deliveredMs"),
-        (unix_millis(col("dlvTime")) - unix_millis(col("sentTime")))
-          .as("lag_ms"))
-    runToSink(s, joined, "append")
-      .filter(col("messageId") =!= "sentinel")
-  }
+    * watermark-triggered null emission that inner joins never need
+    * (see [[deliveryJoin]] for why the sentinels pass both sides). */
+  def s08(s: SparkSession, d: String): DataFrame = deliveryJoin(s, d, "left_outer")
 
   /** The left filter (`event_type <> 'purchase'`) lives in WHERE, not
     * the ON clause — in a left join an ON-side left predicate would
@@ -1143,7 +1129,6 @@ object StreamingQueries {
     * an append-only parquet log readable by any later ingest epoch
     * (the x27 scale argument, plus exactly-once). */
   def s17(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.ArrayMath
     val dir = admissionReplayDir(s, d)
     val stream = replayStream(s, dir, 1)
     val outBase = keptDir()
@@ -1172,41 +1157,7 @@ object StreamingQueries {
           // the relation through its own LRU — no extra materialization
           // needed here)
           val sigB = Dedup.admissionSig(batch)
-          val priorDirs = Option(stateBase.listFiles())
-            .getOrElse(Array.empty[java.io.File]).toSeq
-            .filter(_.getName.startsWith("sig_b"))
-            .filter(_.getName.drop(5).toLong < batchId)
-            .map(_.getAbsolutePath)
-          val prior =
-            if (priorDirs.isEmpty) None
-            else Some(s.read.schema(sigB.schema).parquet(priorDirs: _*))
-          val bandsB = Dedup.admissionBands(sigB)
-          // same-batch predecessors: partner with smaller id
-          val sameCand = bandsB.alias("x")
-            .join(bandsB.alias("y"), col("x.bk") === col("y.bk") &&
-              col("y.doc_id") < col("x.doc_id"))
-            .select(col("x.doc_id").as("doc_id"),
-              col("y.doc_id").as("partner"))
-          // earlier-batch predecessors: every banded corpus match
-          val cand = prior.fold(sameCand) { p =>
-            sameCand.unionByName(
-              bandsB.alias("x")
-                .join(Dedup.admissionBands(p).alias("y"),
-                  col("x.bk") === col("y.bk"))
-                .select(col("x.doc_id").as("doc_id"),
-                  col("y.doc_id").as("partner")))
-          }.distinct()
-          val partnerHs = prior.fold(sigB)(p => sigB.unionByName(p))
-            .select(col("doc_id").as("partner"), col("hs").as("hsb"))
-          val verified = cand
-            .join(sigB.select(col("doc_id"), col("hs").as("hsa")), "doc_id")
-            .join(partnerHs, "partner")
-            .withColumn("inter",
-              ArrayMath.sortedIntersectSize(col("hsa"), col("hsb")))
-            .withColumn("jac", col("inter") /
-              (size(col("hsa")) + size(col("hsb")) - col("inter"))
-                .cast("double"))
-            .filter(col("jac") >= 0.8)
+          val verified = admissionPairs(s, stateBase, sigB, batchId)
             .groupBy("doc_id").agg(count(lit(1)).as("n_prior"))
           batch.select("doc_id").distinct()
             .join(verified, Seq("doc_id"), "left")
@@ -1215,14 +1166,58 @@ object StreamingQueries {
               coalesce(col("n_prior"), lit(0L)).as("n_prior"))
             .write.mode("overwrite")
             .parquet(new java.io.File(outBase, s"b$batchId").getAbsolutePath)
-          sigB.write.mode("overwrite")
-            .parquet(new java.io.File(stateBase, s"sig_b$batchId")
-              .getAbsolutePath)
+          writeSig(stateBase, sigB, batchId)
         }
     })(_ => graft.Tables.read(s, Option(outBase.listFiles())
         .getOrElse(Array.empty[java.io.File])
         .filter(_.getName.startsWith("b")).map(_.getAbsolutePath).toSeq: _*))
   }
+
+  /** The verified near-dup pairs of one admission batch: `(doc_id,
+    * partner)` for each batch doc and each partner — a same-batch doc
+    * with a smaller id, or any doc of an earlier batch's `sig_b<id>` in
+    * `sigDir` — whose banded candidate pair verifies at exact Jaccard
+    * ≥ 0.8. `sigB` is the batch's [[Dedup.admissionSig]]. */
+  private def admissionPairs(s: SparkSession, sigDir: File, sigB: DataFrame,
+      batchId: Long): DataFrame = {
+    import graft.functions.ArrayMath
+    val priorDirs = Option(sigDir.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .filter(_.getName.startsWith("sig_b"))
+      .filter(_.getName.drop(5).toLong < batchId)
+      .map(_.getAbsolutePath)
+    val prior =
+      if (priorDirs.isEmpty) None
+      else Some(s.read.schema(sigB.schema).parquet(priorDirs: _*))
+    val bandsB = Dedup.admissionBands(sigB)
+    // same-batch predecessors: partner with smaller id
+    val sameCand = bandsB.alias("x")
+      .join(bandsB.alias("y"), col("x.bk") === col("y.bk") &&
+        col("y.doc_id") < col("x.doc_id"))
+      .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("partner"))
+    // earlier-batch predecessors: every banded corpus match
+    val cand = prior.fold(sameCand) { p =>
+      sameCand.unionByName(
+        bandsB.alias("x")
+          .join(Dedup.admissionBands(p).alias("y"), col("x.bk") === col("y.bk"))
+          .select(col("x.doc_id").as("doc_id"), col("y.doc_id").as("partner")))
+    }.distinct()
+    val partnerHs = prior.fold(sigB)(p => sigB.unionByName(p))
+      .select(col("doc_id").as("partner"), col("hs").as("hsb"))
+    cand
+      .join(sigB.select(col("doc_id"), col("hs").as("hsa")), "doc_id")
+      .join(partnerHs, "partner")
+      .withColumn("inter", ArrayMath.sortedIntersectSize(col("hsa"), col("hsb")))
+      .filter(col("inter") /
+        (size(col("hsa")) + size(col("hsb")) - col("inter")).cast("double") >= 0.8)
+      .select(col("doc_id"), col("partner"))
+  }
+
+  /** Append batch `batchId`'s signatures to the signature log in
+    * `sigDir` as `sig_b<id>` — an overwrite, so a replayed batch
+    * rewrites identical content. */
+  private def writeSig(sigDir: File, sigB: DataFrame, batchId: Long): Unit =
+    sigB.write.mode("overwrite")
+      .parquet(new File(sigDir, s"sig_b$batchId").getAbsolutePath)
 
   val s17Sql: String = {
     val pairCtes = Dedup.lshPairCtes(Dedup.admissionShinglesSql,
@@ -1283,10 +1278,10 @@ object StreamingQueries {
 
   /** Replay source for [[s19]]: the simulated next-crawl relation
     * (Diff.nextCrawl — the same derivation x69 gates) as three one-file
-    * micro-batches pinned to `doc_id % 3`. The diff verdicts are
-    * batching-INDEPENDENT (every classification is against the stored
-    * previous-snapshot hash, never intra-crawl), but a pinned split
-    * keeps replays byte-identical. One dir per (app, sf). */
+    * micro-batches pinned to `doc_id % 3`. A doc_id arrives at most once
+    * per crawl here (nextCrawl offsets re-ingested ids past
+    * `max(doc_id)`), so the verdicts are batching-INDEPENDENT, but a
+    * pinned split keeps replays byte-identical. One dir per (app, sf). */
   private def diffReplayDir(s: SparkSession, d: String): File =
     replayFixture(s, "diff::" + d)(byDocMod3(Diff.nextCrawl(
       graft.Tables.documents(s, d).select("doc_id", "text"))))
@@ -1304,84 +1299,12 @@ object StreamingQueries {
     * full state scan at END-OF-CRAWL, the shape a real re-crawl audit
     * runs.
     *
-    * Exactly-once across replays: verdicts are a pure function of the
-    * batch and of strictly-pre-batch state — the classification read
-    * uses [[BucketedUpsert.bucketState]] with the same
-    * strictly-below-batchId version rule [[BucketedUpsert.applyBatch]]
-    * applies to the seen-marking write, so a replayed batch reads what
-    * the first attempt read and overwrites its verdict file with
-    * identical content; seen-marking itself is idempotent. The oracle
-    * is x69's batch twin over the same fixture. */
-  def s19(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.PortableHash
-    val stream = replayStream(s, diffReplayDir(s, d), 1)
-    val nBuckets = 16
-    val outBase = keptDir()
-    val snap = graft.Tables.documents(s, d)
-      .filter(col("text").isNotNull)
-      .select(col("doc_id"), PortableHash.h60(col("text")).as("h"),
-        lit(false).as("seen"))
-    runReplay(s)({ sc =>
-      val stateBase = sc.path("state")
-      // version 0 of the state log = the previous snapshot's hash table
-      BucketedUpsert.applyBatch(s, stateBase, nBuckets, 0L, snap, "doc_id",
-        (_, u) => u)
-      stream.writeStream.outputMode("update")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val vid = batchId + 1 // version 0 is the snapshot load
-          val arrived = batch.filter(col("text").isNotNull)
-            .select(col("doc_id"), PortableHash.h60(col("text")).as("hb"))
-          // touched-bucket set: <= nBuckets small ints, the one driver
-          // materialization (the applyBatch discipline)
-          val touched = arrived
-            .select(BucketedUpsert.bucketExpr(col("doc_id"), nBuckets).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          val target = BucketedUpsert
-            .bucketState(s, stateBase, nBuckets, touched, vid)
-            .map(_.select(col("doc_id"), col("h")))
-            .getOrElse(arrived
-              .select(col("doc_id"), col("hb").as("h")).limit(0))
-          arrived.join(target, Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              when(col("h").isNull, "added")
-                .when(col("h") === col("hb"), "unchanged")
-                .otherwise("changed").as("status"))
-            .write.mode("overwrite")
-            .parquet(new java.io.File(outBase, s"b$vid").getAbsolutePath)
-          // mark arrivals seen; keys with no snapshot row (added docs)
-          // never enter the state — they cannot become removals.
-          // knownTouched: same key set as the classification read above
-          // — skips applyBatch's duplicate distinct-collect job.
-          BucketedUpsert.applyBatch(s, stateBase, nBuckets, vid,
-            arrived.select(col("doc_id")), "doc_id",
-            (t, u) => t.join(
-                u.select(col("doc_id"), lit(true).as("sn")),
-                Seq("doc_id"), "left")
-              .select(col("doc_id"), col("h"),
-                (col("seen") || coalesce(col("sn"), lit(false))).as("seen")),
-            knownTouched = Some(touched))
-        }
-    })(sc => crawlClose(s, sc.path("state"), nBuckets, snap, outBase, !col("seen")))
-  }
-
-  /** Crawl-close reconciliation of the diff replays: every state key
-    * matching `removed` (snapshot keys never seen) is emitted as
-    * `removed`, written next to the per-batch verdicts so the returned
-    * relation — verdicts plus removals — outlives the scratch state
-    * dir. */
-  private def crawlClose(s: SparkSession, stateBase: Path, nBuckets: Int,
-      snap: DataFrame, outBase: File, removed: org.apache.spark.sql.Column): DataFrame = {
-    BucketedUpsert.currentState(s, stateBase, nBuckets)
-      .getOrElse(snap.limit(0)) // empty corpus: nothing to reconcile
-      .filter(removed)
-      .select(col("doc_id"), lit("removed").as("status"))
-      .write.mode("overwrite")
-      .parquet(new File(outBase, "removed").getAbsolutePath)
-    graft.Tables.read(s, Option(outBase.listFiles())
-      .getOrElse(Array.empty[File])
-      .filter(f => f.getName.startsWith("b") || f.getName == "removed")
-      .map(_.getAbsolutePath).toSeq: _*)
-  }
+    * s19 is [[diffReplay]], s24's body, over its own fixture: with no
+    * key arriving twice, the within-batch minimum and the seen filter
+    * change nothing, and an added key enters the state already seen,
+    * so it is never `removed`. The oracle is x69's batch twin. */
+  def s19(s: SparkSession, d: String): DataFrame =
+    diffReplay(s, d, diffReplayDir(s, d))
 
   // ---------------------------------------------------------------- s24
   /** Replay source for [[s24]]: the s19 crawl relation AUGMENTED with
@@ -1415,7 +1338,12 @@ object StreamingQueries {
 
   /** s24 — s19 under INTRA-CRAWL RE-ARRIVALS: the same-key-arrives-
     * twice semantics the s19 gate's pinned split never exercises,
-    * now DEFINED and gated:
+    * DEFINED and gated. The body is [[diffReplay]]. */
+  def s24(s: SparkSession, d: String): DataFrame =
+    diffReplay(s, d, diffRearrReplayDir(s, d))
+
+  /** The one body of the diff replays (s19, s24) over the crawl replay
+    * in `dir`:
     *
     *  - ONE verdict per key per crawl. Verdicts already emitted are
     *    immutable (they live in an append log), so the only coherent
@@ -1431,18 +1359,19 @@ object StreamingQueries {
     *    snapshot hashes, extended with a `snap` bit: snapshot rows
     *    enter as (h, seen=false, snap=true); first arrivals of NEW
     *    keys are inserted as (hb, seen=true, snap=false) so their own
-    *    re-arrivals are suppressed too (s19 never tracked added keys
-    *    at all — under re-arrivals that double-emits `added`).
-    *    Removals at crawl close are snap=true AND never seen, exactly
-    *    s19's reconciliation restricted to genuine snapshot keys.
+    *    re-arrivals are suppressed too. Removals at crawl close are
+    *    snap=true AND never seen.
     *
-    * Everything else — strictly-pre-batch bucketState reads, O(batch)
-    * state I/O, replay-identical verdicts — is s19's contract
-    * verbatim. Oracle: the batch twin resolves each key to its first
-    * file's minimum-hash copy and diffs against the snapshot. */
-  def s24(s: SparkSession, d: String): DataFrame = {
+    * Exactly-once across replays: verdicts are a pure function of the
+    * batch and of strictly-pre-batch state — the classification read
+    * uses [[BucketedUpsert.bucketState]] with the same
+    * strictly-below-batchId version rule [[BucketedUpsert.applyBatch]]
+    * applies to the seen-marking write, so a replayed batch reads what
+    * the first attempt read and overwrites its verdict file with
+    * identical content; seen-marking itself is idempotent. */
+  private def diffReplay(s: SparkSession, d: String, dir: File): DataFrame = {
     import graft.functions.PortableHash
-    val stream = replayStream(s, diffRearrReplayDir(s, d), 1)
+    val stream = replayStream(s, dir, 1)
     val nBuckets = 16
     val outBase = keptDir()
     val snap = graft.Tables.documents(s, d)
@@ -1451,15 +1380,18 @@ object StreamingQueries {
         lit(false).as("seen"), lit(true).as("snap"))
     runReplay(s)({ sc =>
       val stateBase = sc.path("state")
+      // version 0 of the state log = the previous snapshot's hash table
       BucketedUpsert.applyBatch(s, stateBase, nBuckets, 0L, snap, "doc_id",
         (_, u) => u)
       stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val vid = batchId + 1
+          val vid = batchId + 1 // version 0 is the snapshot load
           // within-batch dedup: smallest content hash wins (order-free)
           val arrived = batch.filter(col("text").isNotNull)
             .select(col("doc_id"), PortableHash.h60(col("text")).as("hb"))
             .groupBy("doc_id").agg(min(col("hb")).as("hb"))
+          // touched-bucket set: <= nBuckets small ints, the one driver
+          // materialization (the applyBatch discipline)
           val touched = arrived
             .select(BucketedUpsert.bucketExpr(col("doc_id"), nBuckets).as("b"))
             .distinct().collect().map(_.getInt(0)).toSeq
@@ -1478,7 +1410,8 @@ object StreamingQueries {
             .write.mode("overwrite")
             .parquet(new java.io.File(outBase, s"b$vid").getAbsolutePath)
           // mark arrivals seen; INSERT first-seen new keys (snap=false).
-          // knownTouched: same key set as the classification read above.
+          // knownTouched: same key set as the classification read above
+          // — skips applyBatch's duplicate distinct-collect job.
           BucketedUpsert.applyBatch(s, stateBase, nBuckets, vid,
             arrived, "doc_id",
             (t, u) => t.join(
@@ -1493,8 +1426,21 @@ object StreamingQueries {
                   lit(true).as("seen"), lit(false).as("snap"))),
             knownTouched = Some(touched))
         }
-    })(sc => crawlClose(s, sc.path("state"), nBuckets, snap, outBase,
-      col("snap") && !col("seen")))
+    }) { sc =>
+      // crawl close: snapshot keys never seen are `removed`, written
+      // next to the per-batch verdicts so the returned relation —
+      // verdicts plus removals — outlives the scratch state dir
+      BucketedUpsert.currentState(s, sc.path("state"), nBuckets)
+        .getOrElse(snap.limit(0)) // empty corpus: nothing to reconcile
+        .filter(col("snap") && !col("seen"))
+        .select(col("doc_id"), lit("removed").as("status"))
+        .write.mode("overwrite")
+        .parquet(new File(outBase, "removed").getAbsolutePath)
+      graft.Tables.read(s, Option(outBase.listFiles())
+        .getOrElse(Array.empty[File])
+        .filter(f => f.getName.startsWith("b") || f.getName == "removed")
+        .map(_.getAbsolutePath).toSeq: _*)
+    }
   }
 
   /** Oracle: first-file-wins, min-hash-within-file resolution, then
@@ -1586,18 +1532,11 @@ object StreamingQueries {
     * attempts, but every consumer — bucketState joins, groupBy, the
     * final table read — is set-semantic, so no ordering can leak into
     * state content or the gated answer). The oracle is x55's batch
-    * twin. */
-  def s20(s: SparkSession, d: String): DataFrame =
-    s20(s, d, sys.props.getOrElse("graft.s20.edgeCap",
-      (1 << 17).toString).toInt)
-
-  /** `edgeCap` is explicit so tests can force the overflow branch
-    * per CALL instead of mutating the global `graft.s20.edgeCap`
-    * property (suites run in parallel in one forked JVM — a global
-    * flip would silently re-route a concurrent suite's s20 run). The
-    * harness entry above reads the property once as its default. */
-  def s20(s: SparkSession, d: String, edgeCap: Int): DataFrame = {
-    import graft.functions.ArrayMath
+    * twin.
+    *
+    * `edgeCap` is the edge-row count a batch may collect before it takes
+    * the overflow branch; tests pass 0 to force that branch per call. */
+  def s20(s: SparkSession, d: String, edgeCap: Int = EdgeCap): DataFrame = {
     val stream = replayStream(s, admissionReplayDir(s, d), 1)
     val nBuckets = 16
     val outBase = keptDir()
@@ -1608,45 +1547,13 @@ object StreamingQueries {
       stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sigB = Dedup.admissionSig(batch)
-          val priorDirs = Option(sigBase.listFiles())
-            .getOrElse(Array.empty[java.io.File]).toSeq
-            .filter(_.getName.startsWith("sig_b"))
-            .filter(_.getName.drop(5).toLong < batchId)
-            .map(_.getAbsolutePath)
-          val prior =
-            if (priorDirs.isEmpty) None
-            else Some(s.read.schema(sigB.schema).parquet(priorDirs: _*))
-          val bandsB = Dedup.admissionBands(sigB)
-          val sameCand = bandsB.alias("x")
-            .join(bandsB.alias("y"), col("x.bk") === col("y.bk") &&
-              col("y.doc_id") < col("x.doc_id"))
-            .select(col("x.doc_id").as("did"), col("y.doc_id").as("partner"))
-          val cand = prior.fold(sameCand) { p =>
-            sameCand.unionByName(
-              bandsB.alias("x")
-                .join(Dedup.admissionBands(p).alias("y"),
-                  col("x.bk") === col("y.bk"))
-                .select(col("x.doc_id").as("did"),
-                  col("y.doc_id").as("partner")))
-          }.distinct()
-          val partnerHs = prior.fold(sigB)(p => sigB.unionByName(p))
-            .select(col("doc_id").as("partner"), col("hs").as("hsb"))
           // verified near-dup edges of THIS batch (batch doc `did`
           // against same-batch smaller id or any earlier doc), each
           // carrying its endpoints' store buckets (the SAME bucketExpr
           // the stores use).
-          val edgeDf = cand
-            .join(sigB.select(col("doc_id").as("did"), col("hs").as("hsa")),
-              "did")
-            .join(partnerHs, "partner")
-            .withColumn("inter",
-              ArrayMath.sortedIntersectSize(col("hsa"), col("hsb")))
-            .withColumn("jac", col("inter") /
-              (size(col("hsa")) + size(col("hsb")) - col("inter"))
-                .cast("double"))
-            .filter(col("jac") >= 0.8)
-            .select(col("did"), col("partner"),
-              BucketedUpsert.bucketExpr(col("did"), nBuckets).as("db"),
+          val edgeDf = admissionPairs(s, sigBase, sigB, batchId)
+            .select(col("doc_id").as("did"), col("partner"),
+              BucketedUpsert.bucketExpr(col("doc_id"), nBuckets).as("db"),
               BucketedUpsert.bucketExpr(col("partner"), nBuckets).as("pb"))
           // GUARDED driver materialization of the edge rows: the edge
           // relation is output-quadratic on dup-heavy input (a batch of
@@ -1811,9 +1718,7 @@ object StreamingQueries {
             (t, u) => t.drop("del")
               .join(u.select("lbl"), Seq("lbl"), "left_anti")
               .unionByName(u.filter(!col("del")).drop("del")))
-          sigB.write.mode("overwrite")
-            .parquet(new java.io.File(sigBase, s"sig_b$batchId")
-              .getAbsolutePath)
+          writeSig(sigBase, sigB, batchId)
         }
     }) { sc =>
       // the maintained table IS the product; written beside the
@@ -1829,6 +1734,9 @@ object StreamingQueries {
       s.read.schema(split.schema).parquet(splitPath)
     }
   }
+
+  /** s20's default edge-collect cap. */
+  private final val EdgeCap = 1 << 17
 
   // ---------------------------------------------------------------- s21
   /** documents (doc_id, lang, n_chars) split into 3 replay files by

@@ -116,11 +116,14 @@ object KafkaIO {
       .as[MessageStatus]
   }
 
-  /** Streaming sink: at-least-once keyed produce; the micro-batch epoch
-    * commit is the flush barrier (C1's producer.flush parity). */
+  /** Streaming sink: at-least-once keyed produce in Confluent wire
+    * format, with the ids `registry` issues (what every consumer's
+    * [[unframeConfluent]] reads); the micro-batch epoch commit is the
+    * flush barrier (C1's producer.flush parity). */
   def writer(ds: Dataset[MessageStatus], bootstrap: String,
-      checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    var w = frame(ds).writeStream.format("kafka")
+      checkpoint: String, registry: SchemaIdResolver)
+      : DataStreamWriter[org.apache.spark.sql.Row] = {
+    var w = frameConfluent(ds, registry).writeStream.format("kafka")
       .option("checkpointLocation", checkpoint)
     producerOptions(bootstrap).foreach { case (k, v) => w = w.option(k, v) }
     w

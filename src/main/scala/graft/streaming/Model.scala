@@ -59,7 +59,13 @@ case class MsgState(
   *    timer at its latest timestamp + timeout
   * So heartbeats past the deadline never raise a second alert, however
   * they are cut into micro-batches; a key quiet for longer than that
-  * starts a new lifecycle. */
+  * starts a new lifecycle.
+  *
+  * Limit: a resolved key keeps nothing, so a `sent` that reaches the
+  * detector in a later micro-batch than its key's in-time `delivered`
+  * starts a new clock (and alerts if nothing follows). The detector
+  * needs per-key in-order delivery, as a Kafka partition keyed by
+  * `messageId` gives. */
 object MsgState {
 
   private def minOf(a: Option[Long], b: Option[Long]): Option[Long] = (a, b) match {

@@ -10,7 +10,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * reference declares it in prose but never implements it).
   *
   * Semantics: the transition in [[MsgState]], shared with
-  * [[TwsDetector]]; the relational twin is [[alertsBatch]].
+  * [[TwsDetector]]; the relational twin is [[alertsBatch]]. Input must
+  * arrive in order per key (a Kafka partition keyed by `messageId`): a
+  * `sent` landing in a later micro-batch than its key's in-time
+  * `delivered` starts a new clock — see [[MsgState]].
   *
   * Scale: state is bounded at one MsgState per in-flight (or recently
   * alerted) key and is hash-partitioned by messageId across executors;

@@ -370,18 +370,23 @@ class OperatorsSpec extends SparkSpec {
     val dlv = ev.filter(col("event_type") === "purchase")
       .select(col("user_id").cast("string").as("d_id"),
         col("t").as("dlvTime"))
-    val batch = AsOf.intervalJoin(sent, dlv, "messageId", "d_id",
-        "sentTime", "dlvTime", StreamingQueries.JoinBoundMs)
-      .select(col("messageId"),
-        unix_millis(col("sentTime")).as("sentMs"),
-        unix_millis(col("dlvTime")).as("deliveredMs"),
-        (unix_millis(col("dlvTime")) - unix_millis(col("sentTime")))
-          .as("lag_ms"))
-    val a = StreamingQueries.s05(spark, sf).collect()
-      .map(_.toSeq.toString).sorted.toSeq
-    val b = batch.collect().map(_.toSeq.toString).sorted.toSeq
-    assert(a.nonEmpty)
-    assert(a == b)
+    // s05 is the inner join, s08 the left outer one (undelivered sent
+    // events carry null delivery columns)
+    for ((replay, joinType) <- Seq(
+        (StreamingQueries.s05 _, "inner"), (StreamingQueries.s08 _, "left_outer"))) {
+      val batch = AsOf.intervalJoin(sent, dlv, "messageId", "d_id",
+          "sentTime", "dlvTime", StreamingQueries.JoinBoundMs, joinType)
+        .select(col("messageId"),
+          unix_millis(col("sentTime")).as("sentMs"),
+          unix_millis(col("dlvTime")).as("deliveredMs"),
+          (unix_millis(col("dlvTime")) - unix_millis(col("sentTime")))
+            .as("lag_ms"))
+      val a = replay(spark, sf).collect()
+        .map(_.toSeq.toString).sorted.toSeq
+      val b = batch.collect().map(_.toSeq.toString).sorted.toSeq
+      assert(a.nonEmpty, joinType)
+      assert(a == b, joinType)
+    }
   }
 
   test("PII redaction masks and counts emails, IPs, and phones") {

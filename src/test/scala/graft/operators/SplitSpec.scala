@@ -64,9 +64,8 @@ class SplitSpec extends SparkSpec {
     // driver union-find is bypassed and the distributed
     // star-contraction fallback computes every merge — the dup-storm
     // code path a quadratic edge batch would take in production.
-    // edgeCap is an explicit per-call parameter (not the global
-    // graft.s20.edgeCap property) so concurrent suites exercising
-    // s20 keep their own branch.
+    // edgeCap is an explicit per-call parameter, so concurrent suites
+    // exercising s20 keep the default cap.
     val got = StreamingQueries.s20(spark, sf, edgeCap = 0)
       .as[(Long, Long, String)].collect().toSet
     val want = Clusters.x55(spark, sf)

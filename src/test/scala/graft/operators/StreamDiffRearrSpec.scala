@@ -3,7 +3,8 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** s24 — the re-arrival-tolerant streaming diff. The CORRECTNESS gate
+/** s19 and s24 — the streaming diff, one body over two fixtures.
+  * s24 is the re-arrival-tolerant run. The CORRECTNESS gate
   * faces the DuckDB oracle; this suite pins the semantics the gate
   * cannot see from one run:
   *   - exactly ONE verdict per key (suppression actually suppresses);
@@ -59,5 +60,20 @@ class StreamDiffRearrSpec extends SparkSpec {
     val dupRows = next.filter(col("doc_id") % 9 === 2).count()
     assert(reArr > 0, "fixture must contain cross-batch re-arrivals")
     assert(dupRows > 0, "fixture must contain within-batch duplicates")
+  }
+
+  test("s19: one verdict per key; equals the batch corpus diff") {
+    // s19 runs s24's body over a crawl in which no key arrives twice,
+    // so its answer must be x69's plain diff of snapshot and crawl
+    val got = StreamingQueries.s19(spark, sf)
+    val dups = got.groupBy("doc_id").count().filter(col("count") > 1).count()
+    assert(dups == 0L, "one verdict per key")
+    val docs = graft.Tables.documents(spark, sf).select("doc_id", "text")
+    val want = Diff.corpusDiff(docs, Diff.nextCrawl(docs))
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val gotSet = got.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(gotSet == want)
+    // non-vacuous: every verdict kind occurs
+    assert(gotSet.map(_._2) == Set("added", "removed", "changed", "unchanged"))
   }
 }

@@ -183,6 +183,34 @@ class SourcesSpec extends SparkSpec {
     assert(got.nonEmpty)
   }
 
+  test("KafkaIO.writer produces what unframeConfluent reads") {
+    // the writer's own sink, swapped onto the in-process transport (the
+    // kafka.* options are ignored there); every consumer in the repo
+    // reads Confluent framing, so a bare-Avro writer fails the read
+    import spark.implicits._
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    val fmt = classOf[memkafka.MemKafkaProvider].getName
+    val topic = "w_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val msgs = Generator.batch(spark, 30L).as[MessageStatus].collect().toSeq
+    // a shared registry that already holds the topic's subjects, so the
+    // read fails on the frame, not on the lookup
+    val reg = new InMemorySchemaRegistry
+    reg.register(KafkaIO.KeySubject, AvroWire.MessageKeySchema)
+    reg.register(KafkaIO.ValueSubject, AvroWire.MessageStatusSchema)
+    val src = MemoryStream[MessageStatus]
+    val w = KafkaIO.writer(src.toDS(), "broker:9092",
+        Files.createTempDirectory("writer_ckpt").toString, reg)
+      .format(fmt).option("topic", topic).start()
+    try { src.addData(msgs); w.processAllAvailable() } finally w.stop()
+    try {
+      val log = memkafka.MemBroker.slice(topic, 0, Long.MaxValue).toSeq
+      val got = KafkaIO.unframeConfluent(log.toDF("key", "value"), reg)
+        .collect().toSet
+      assert(got == msgs.toSet && got.nonEmpty)
+    } finally memkafka.MemBroker.clear(topic)
+  }
+
   test("e2e: MemKafka -> unframeConfluent -> detector, epochs + restart") {
     // The declared reference pipeline (undelivered-message-alert/
     // README.md:150-156) end-to-end over the live transport: producer
