@@ -1386,10 +1386,14 @@ object StreamingQueries {
       stream.writeStream.outputMode("update")
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val vid = batchId + 1 // version 0 is the snapshot load
-          // within-batch dedup: smallest content hash wins (order-free)
+          // within-batch dedup: smallest content hash wins (order-free).
+          // Persisted for the batch: the touched-bucket collect, the
+          // verdict write and the state update below each read it, and
+          // unpersisted they would each run its aggregation again
           val arrived = batch.filter(col("text").isNotNull)
             .select(col("doc_id"), PortableHash.h60(col("text")).as("hb"))
             .groupBy("doc_id").agg(min(col("hb")).as("hb"))
+            .persist()
           // touched-bucket set: <= nBuckets small ints, the one driver
           // materialization (the applyBatch discipline)
           val touched = arrived
@@ -1425,6 +1429,8 @@ object StreamingQueries {
                 .select(col("doc_id"), col("hb").as("h"),
                   lit(true).as("seen"), lit(false).as("snap"))),
             knownTouched = Some(touched))
+          arrived.unpersist()
+          ()
         }
     }) { sc =>
       // crawl close: snapshot keys never seen are `removed`, written

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.functions.PortableHash
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -23,38 +24,61 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    (message-tracking.json:14-35, 56-71)
   *
   * Determinism: every column derives from the row id through the
-  * portable md5 hash — not rand(), whose draw order is
-  * partition-dependent — so the same (n, seed, t0) produces identical
-  * rows on any cluster layout, and DuckDB can replay the exact stream.
+  * portable md5 hash (`PortableHash.h60`) — not rand(), whose draw
+  * order is partition-dependent — so the same (n, seed, t0) produces
+  * identical rows on any cluster layout, and DuckDB can replay the
+  * exact stream. The delivery class compares integers, `h % 10000`
+  * against 8500 and 9500, in every formulation.
   */
 object Generator {
 
   val Carriers: Seq[String] = Seq("verizon", "att", "t-mobile")
   val AreaCodes: Seq[Int] = Seq(212, 415, 713, 404, 602, 503)
 
+  /** Fewest lifecycles in one range of [[batch]]'s id split: a smaller
+    * range costs more in task scheduling than its rows save (the rule
+    * `MemKafkaMicroBatchStream.ranges` applies to a batch's records). */
+  final val MinRangeLifecycles = 8192L
+
+  /** Delivery class of a lifecycle from its bucket `h % 10000` (the
+    * uniform the reference draws): below 8500 normal (85%), below 9500
+    * delayed (10%), the rest never delivered (5%). */
+  private final val NormalBelow = 8500
+  private final val DelayedBelow = 9500
+
+  /** The portable hash of lifecycle `id`: h60 of `'k' || (id + seed)`. */
+  private def lifecycleHash(id: Column, seed: Long): Column =
+    PortableHash.h60(concat(lit("k"), id + seed))
+
+  /** The frozen per-key vars [[batch]] and [[stream]] derive from `h`. */
+  private val PhoneNumberSql =
+    s"element_at(array(${AreaCodes.map(_ + "L").mkString(", ")}), cast(h % 6 + 1 as int)) * 10000000" +
+      " + ((h div 6) % 800 + 200) * 10000" +
+      " + ((h div 4800) % 9000 + 1000) AS phoneNumber"
+  private val CarrierSql =
+    s"element_at(array(${Carriers.map(c => s"'$c'").mkString(", ")}), cast((h div 43200000) % 3 + 1 as int)) AS carrier"
+
   /** Deterministic batch transcript (sent + heartbeats + delivered) of
-    * n message lifecycles starting at epochMs t0. */
+    * n message lifecycles starting at epochMs t0.
+    *
+    * The ids are split into at most `defaultParallelism` contiguous
+    * ranges of at least [[MinRangeLifecycles]] each, so a large
+    * transcript is generated on every core. Rows and collect order do
+    * not depend on the split: the union is every `sent` in id order,
+    * then every `delivered` in id order. */
   def batch(spark: SparkSession, n: Long, seed: Long = 42L,
       t0: Long = 1700000000000L, timeoutMs: Long = 120000L,
       heartbeatMs: Long = 30000L): DataFrame = {
-    val keyed = spark.range(0, n, 1, math.max(1, (n / 100000L).toInt))
-      .selectExpr("id",
-        s"cast(conv(substring(md5(cast(concat('k', id + $seed) as binary)), 1, 15), 16, 10) as bigint) AS h")
+    val ranges = math.max(1L, math.min(
+      spark.sparkContext.defaultParallelism.toLong, n / MinRangeLifecycles)).toInt
+    val keyed = spark.range(0, n, 1, ranges)
+      .select(col("id"), lifecycleHash(col("id"), seed).as("h"))
       .selectExpr(
-        "concat('msg-', id) AS messageId",
-        s"element_at(array(${AreaCodes.map(_ + "L").mkString(", ")}), cast(h % 6 + 1 as int)) * 10000000" +
-          " + ((h div 6) % 800 + 200) * 10000" +
-          " + ((h div 4800) % 9000 + 1000) AS phoneNumber",
-        s"element_at(array(${Carriers.map(c => s"'$c'").mkString(", ")}), cast((h div 43200000) % 3 + 1 as int)) AS carrier",
-        "(h % 10000) / 10000.0 AS u",
-        s"$t0 + h % 60000 AS sentTime")
-      .withColumn("delivery_type",
-        when(col("u") < 0.85, "normal")
-          .when(col("u") < 0.95, "delayed")
-          .otherwise("never"))
+        "concat('msg-', id) AS messageId", PhoneNumberSql, CarrierSql,
+        "h % 10000 AS bucket", s"$t0 + h % 60000 AS sentTime")
       .withColumn("deliveryDelay",
-        when(col("delivery_type") === "normal", 30000L)
-          .when(col("delivery_type") === "delayed", 180000L))
+        when(col("bucket") < NormalBelow, 30000L)
+          .when(col("bucket") < DelayedBelow, 180000L))
       .withColumn("endMs", coalesce(col("deliveryDelay"), lit(timeoutMs)))
 
     val sent = keyed
@@ -85,11 +109,11 @@ object Generator {
        |      + ((h // 6) % 800 + 200) * 10000
        |      + ((h // 4800) % 9000 + 1000) AS phoneNumber,
        |    $carr[CAST((h // 43200000) % 3 + 1 AS INT)] AS carrier,
-       |    (h % 10000) / 10000.0 AS u,
+       |    h % 10000 AS bucket,
        |    $t0 + h % 60000 AS sentTime
        |  FROM keyed),
        |cls AS (SELECT *,
-       |    CASE WHEN u < 0.85 THEN 30000 WHEN u < 0.95 THEN 180000 END AS deliveryDelay
+       |    CASE WHEN bucket < $NormalBelow THEN 30000 WHEN bucket < $DelayedBelow THEN 180000 END AS deliveryDelay
        |  FROM base),
        |horizon AS (SELECT *, coalesce(deliveryDelay, $timeoutMs) AS endMs FROM cls),
        |sent AS (SELECT messageId, 'sent' AS status, phoneNumber, carrier,
@@ -130,25 +154,20 @@ object Generator {
     import spark.implicits._
     val raw = spark.readStream.format("rate")
       .option("rowsPerSecond", rowsPerSecond).load()
-    val births = raw.selectExpr(
-      "value AS id",
-      s"cast(conv(substring(md5(cast(concat('k', value + $seed) as binary)), 1, 15), 16, 10) as bigint) AS h",
-      "unix_millis(timestamp) AS ts")
+    val births = raw.select(col("value").as("id"),
+        lifecycleHash(col("value"), seed).as("h"),
+        unix_millis(col("timestamp")).as("ts"))
       .selectExpr(
-        "concat('msg-', id) AS messageId",
-        s"element_at(array(${AreaCodes.map(_ + "L").mkString(", ")}), cast(h % 6 + 1 as int)) * 10000000" +
-          " + ((h div 6) % 800 + 200) * 10000" +
-          " + ((h div 4800) % 9000 + 1000) AS phoneNumber",
-        s"element_at(array(${Carriers.map(c => s"'$c'").mkString(", ")}), cast((h div 43200000) % 3 + 1 as int)) AS carrier",
-        "(h % 10000) / 10000.0 AS u",
+        "concat('msg-', id) AS messageId", PhoneNumberSql, CarrierSql,
+        "h % 10000 AS bucket",
         // Box-Muller gaussian from two hash-derived uniforms (offset by
         // 0.5 so ln never sees zero); frozen per key like every var
         "sqrt(-2.0 * ln(((h div 10000) % 10000 + 0.5) / 10000.0))" +
           " * cos(2.0 * pi() * ((h div 100000000) % 10000 + 0.5) / 10000.0) AS g",
         "ts")
       .select(col("messageId"), col("phoneNumber"), col("carrier"), col("ts"),
-        when(col("u") < 0.85, lit(normalMs))
-          .when(col("u") < 0.95,
+        when(col("bucket") < NormalBelow, lit(normalMs))
+          .when(col("bucket") < DelayedBelow,
             greatest(lit(1L),
               round(lit(delayedMeanMs) + lit(delayedStdMs) * col("g"))
                 .cast("long")))

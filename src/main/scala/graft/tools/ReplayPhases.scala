@@ -2,16 +2,23 @@ package graft.tools
 
 import graft.{GraftSession, SparkEntry, Tables, TempDirs}
 import graft.operators.{Sessions, StreamingQueries}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Diagnostic main for the round-13 verdict ask #2: attribute the
-  * s-family replay constant into phases, per row, so the remaining
-  * cost is either shavable or provably Spark-machinery floor.
+/** Diagnostic main: attribute the s-family replay constant into
+  * phases, per row, so the remaining cost is either shavable or
+  * provably Spark-machinery floor.
   *
-  * For each s-row (warm, second run measured):
+  * Every selected row runs once to warm the session (replay dirs built,
+  * codegen cached) before any row is measured, and the list is then
+  * measured [[MeasuredRuns]] times over in interleaved rounds, so a
+  * drift over the session reaches every row alike; a row's `wall`
+  * is reported as min and median, every other column as its median
+  * over those runs:
   *   wall     — harness wall time for the whole queries() call
   *   life     — Σ per-streaming-query (terminated − started)
   *   trig     — Σ per-batch triggerExecution (the time the stream was
@@ -23,6 +30,10 @@ import java.util.concurrent.ConcurrentHashMap
   *              checkpoint scratch setup/teardown)
   *   idle+stop = life − trig − startup: trigger scheduling gaps and
   *              stop() teardown
+  *   jobs, stages — Spark jobs started and stages submitted inside
+  *              micro-batches (tagged with the batch id), in all and per
+  *              batch: a relation used twice in a batch without a
+  *              persist shows up as its stages run twice
   *
   * Also measures NOOP scaffold rows — a 3-file replay through the same
   * maxFilesPerTrigger=1 / memory-sink / scratch-checkpoint shape with
@@ -31,6 +42,22 @@ import java.util.concurrent.ConcurrentHashMap
   * future shave: 25 × noop is the floor of the whole family.
   */
 object ReplayPhases {
+
+  /** Measured runs per row, after the one warm-up pass over the list. */
+  private final val MeasuredRuns = 3
+
+  /** The local property Spark sets on every job of a micro-batch. */
+  private final val BatchIdKey = "streaming.sql.batchId"
+
+  /** One measured run of a row; times in seconds. */
+  private final case class Run(wall: Double, life: Double, trig: Double,
+      startup: Double, batches: Double, queries: Double, jobs: Double,
+      stages: Double, addBatch: Double, walCommit: Double, planning: Double)
+
+  private def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2
+  }
 
   private class Phases {
     val qStart = new ConcurrentHashMap[java.util.UUID, Long]()
@@ -43,10 +70,12 @@ object ReplayPhases {
     @volatile var batches = 0
     @volatile var queries = 0
     @volatile var startup = 0L
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
     def reset(): Unit = {
       qStart.clear(); qFirstBatch.clear()
       life = 0; trig = 0; addBatch = 0; walCommit = 0; planning = 0
-      batches = 0; queries = 0; startup = 0
+      batches = 0; queries = 0; startup = 0; jobs.set(0); stages.set(0)
     }
   }
 
@@ -80,34 +109,54 @@ object ReplayPhases {
       }
     })
 
+    def inBatch(props: java.util.Properties): Boolean =
+      props != null && props.getProperty(BatchIdKey) != null
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (inBatch(e.properties)) ph.jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (inBatch(e.properties)) ph.stages.incrementAndGet()
+    })
+
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val names = sys.env.get("SPARK_GRAFT_PROBE_ONLY")
       .map(_.split(",").map(_.trim).toSeq)
       .getOrElse(SparkEntry.queries.keys.filter(_.startsWith("s")).toSeq.sorted)
 
-    println("row wall_s life_s trig_s startup_s outside_s idlestop_s " +
-      "batches queries addBatch_s walCommit_s planning_s")
-    var tw, tl, tt, tsu, tout = 0.0
-    for (n <- names) {
-      val fn = SparkEntry.queries(n)
-      fn(spark, d).count() // warm: replay dirs built, codegen cached
+    names.distinct.foreach(n => SparkEntry.queries(n)(spark, d).count())
+    println("row wall_min_s wall_med_s life_s trig_s startup_s outside_s " +
+      "idlestop_s batches queries jobs stages jobs_per_batch stages_per_batch " +
+      "addBatch_s walCommit_s planning_s")
+    def measure(n: String): Run = {
       Thread.sleep(300)
       ph.reset()
       val t0 = System.nanoTime()
-      fn(spark, d).count()
+      SparkEntry.queries(n)(spark, d).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(400) // let async terminated events land
-      val life = ph.life / 1e3; val trig = ph.trig / 1e3
-      val su = ph.startup / 1e3
-      val outside = wall - life
-      val idleStop = life - trig - su
-      println(f"$n $wall%.2f $life%.2f $trig%.2f $su%.2f $outside%.2f " +
-        f"$idleStop%.2f ${ph.batches} ${ph.queries} ${ph.addBatch / 1e3}%.2f " +
-        f"${ph.walCommit / 1e3}%.2f ${ph.planning / 1e3}%.2f")
+      Thread.sleep(400) // let async terminated and listener events land
+      Run(wall, ph.life / 1e3, ph.trig / 1e3, ph.startup / 1e3, ph.batches,
+        ph.queries, ph.jobs.get, ph.stages.get, ph.addBatch / 1e3,
+        ph.walCommit / 1e3, ph.planning / 1e3)
+    }
+    val rounds = Seq.fill(MeasuredRuns)(names.map(measure))
+    var tw, tl, tt, tsu, tout = 0.0
+    for ((n, i) <- names.zipWithIndex) {
+      val runs = rounds.map(_(i))
+      def med(f: Run => Double): Double = median(runs.map(f))
+      val wall = med(_.wall); val life = med(_.life); val trig = med(_.trig)
+      val su = med(_.startup); val outside = med(r => r.wall - r.life)
+      val idleStop = med(r => r.life - r.trig - r.startup)
+      val batches = med(_.batches); val jobs = med(_.jobs); val stages = med(_.stages)
+      def perBatch(x: Double) = if (batches > 0) x / batches else 0.0
+      println(f"$n ${runs.map(_.wall).min}%.2f $wall%.2f $life%.2f $trig%.2f " +
+        f"$su%.2f $outside%.2f $idleStop%.2f ${batches.toInt} " +
+        f"${med(_.queries).toInt} ${jobs.toInt} ${stages.toInt} " +
+        f"${perBatch(jobs)}%.1f ${perBatch(stages)}%.1f ${med(_.addBatch)}%.2f " +
+        f"${med(_.walCommit)}%.2f ${med(_.planning)}%.2f")
       tw += wall; tl += life; tt += trig; tsu += su; tout += outside
     }
-    println(f"TOTAL wall=$tw%.1f life=$tl%.1f trig=$tt%.1f startup=$tsu%.1f " +
-      f"outside=$tout%.1f")
+    println(f"TOTAL (medians) wall=$tw%.1f life=$tl%.1f trig=$tt%.1f " +
+      f"startup=$tsu%.1f outside=$tout%.1f")
 
     // ---- irreducible scaffold: noop replays through the same shape
     import spark.implicits._

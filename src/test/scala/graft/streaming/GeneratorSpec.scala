@@ -1,6 +1,8 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Range
 import org.apache.spark.sql.functions._
 
 /** Distribution and determinism properties of the reference-parity
@@ -39,6 +41,56 @@ class GeneratorSpec extends SparkSpec {
     val c = Generator.batch(spark, 200L, seed = 2L).collect().toSet
     assert(a == b)
     assert(a != c)
+  }
+
+  /** [[Generator.batch]] as it was before the id split: one partition,
+    * the `conv` hex round trip of md5 for `h`, the decimal `u`. */
+  private def batchOnePartition(n: Long, seed: Long = 42L,
+      t0: Long = 1700000000000L, timeoutMs: Long = 120000L,
+      heartbeatMs: Long = 30000L): DataFrame = {
+    val keyed = spark.range(0, n, 1, 1)
+      .selectExpr("id",
+        s"cast(conv(substring(md5(cast(concat('k', id + $seed) as binary)), 1, 15), 16, 10) as bigint) AS h")
+      .selectExpr(
+        "concat('msg-', id) AS messageId",
+        s"element_at(array(${Generator.AreaCodes.map(_ + "L").mkString(", ")}), cast(h % 6 + 1 as int)) * 10000000" +
+          " + ((h div 6) % 800 + 200) * 10000" +
+          " + ((h div 4800) % 9000 + 1000) AS phoneNumber",
+        s"element_at(array(${Generator.Carriers.map(c => s"'$c'").mkString(", ")}), cast((h div 43200000) % 3 + 1 as int)) AS carrier",
+        "(h % 10000) / 10000.0 AS u",
+        s"$t0 + h % 60000 AS sentTime")
+      .withColumn("deliveryDelay",
+        when(col("u") < 0.85, 30000L).when(col("u") < 0.95, 180000L))
+      .withColumn("endMs", coalesce(col("deliveryDelay"), lit(timeoutMs)))
+    val sent = keyed
+      .selectExpr("messageId", "phoneNumber", "carrier", "sentTime",
+        s"explode(sequence(0L, endMs - 1, ${heartbeatMs}L)) AS off")
+      .select(col("messageId"), lit("sent").as("status"), col("phoneNumber"),
+        col("carrier"), (col("sentTime") + col("off")).as("timestamp"))
+    val delivered = keyed.filter(col("deliveryDelay").isNotNull)
+      .select(col("messageId"), lit("delivered").as("status"),
+        col("phoneNumber"), col("carrier"),
+        (col("sentTime") + col("deliveryDelay")).as("timestamp"))
+    sent.unionByName(delivered)
+  }
+
+  test("batch rows and collect order do not depend on the id split") {
+    assume(spark.sparkContext.defaultParallelism >= 2,
+      "a one-core session plans every n as one range")
+    val min = Generator.MinRangeLifecycles
+    for (n <- Seq(1L, min - 1, min, 3 * min + 5); seed <- Seq(42L, 7L)) {
+      val got = Generator.batch(spark, n, seed).collect().toSeq
+      val want = batchOnePartition(n, seed).collect().toSeq
+      assert(got.length == want.length, s"n=$n seed=$seed")
+      val firstDiff = got.zip(want).indexWhere { case (g, w) => g != w }
+      assert(firstDiff < 0, s"n=$n seed=$seed row $firstDiff: " +
+        s"${got.lift(firstDiff)} vs ${want.lift(firstDiff)}")
+    }
+    def ranges(n: Long) = Generator.batch(spark, n).queryExecution.analyzed
+      .collect { case r: Range => r.numSlices }.flatten
+    assert(ranges(min - 1) == Seq(1, 1), "below the minimum: one range")
+    assert(ranges(3 * min + 5).forall(_ > 1),
+      s"3 x the minimum: ${ranges(3 * min + 5)} ranges")
   }
 
   test("heartbeats arrive every 30s until the terminal event") {
