@@ -1,17 +1,26 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Parquet table loader over a driver-provided scale-factor directory
-  * (TESTDATA.md). One parquet file per table, read through [[read]]: the
-  * footer is read on the driver and no Spark job runs to infer the
-  * schema; predicate pushdown and column pruning apply from the scan.
+  * (TESTDATA.md). One parquet file per table. A fixture table ([[apply]],
+  * [[events]]) is resolved once per session; any other path is read
+  * afresh through [[read]]. Either way no Spark job runs to infer the
+  * schema, and predicate pushdown and column pruning apply from the
+  * scan.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    read(spark, s"$dir/$name.parquet")
+    fixture(spark, s"$dir/$name.parquet")
 
   /** `spark.read.parquet(paths: _*)` without its schema-inference job:
     * the read is handed [[schemaOf]]. */
@@ -21,11 +30,49 @@ object Tables {
   /** The schema `spark.read.parquet(paths: _*)` infers, taken from the
     * footer Spark would consult, read on the driver ([[FooterSchema]]).
     * No cache: every call reads the footer afresh, so a file rewritten
-    * with another schema is read with the new one. With no footer to read
-    * (a missing path, no data file), Spark's own inference runs and raises
-    * its own error. */
+    * with another schema is read with the new one. Only the fixture reads
+    * of [[apply]] and [[events]] keep a resolved relation, and they
+    * resolve a file again when its length or modification time changes.
+    * With no footer to read (a missing path, no data file), Spark's own
+    * inference runs and raises its own error. */
   def schemaOf(spark: SparkSession, paths: String*): StructType =
     FooterSchema(spark, paths).getOrElse(spark.read.parquet(paths: _*).schema)
+
+  /** A fixture file's analyzed relation and the file state it was
+    * resolved from. */
+  private final case class Resolved(length: Long, modified: Long,
+      relation: MultiInstanceRelation)
+
+  /** Keyed by session (identity), path and [[FooterSchema.confs]]: one
+    * entry per fixture file and conf set a session reads, kept for the
+    * life of the JVM. */
+  private val resolved =
+    new ConcurrentHashMap[(SparkSession, String, Seq[Boolean]), Resolved]()
+
+  /** [[read]] of a fixture file, resolved once per session. The first
+    * read keeps the analyzed relation: the schema from the footer and the
+    * file index with its listing. A later read stats the file, and reuses
+    * the relation when the length and modification time are the same and
+    * so are the session's schema-affecting parquet confs; otherwise it
+    * resolves the file again. Every read returns `relation.newInstance()`,
+    * so attribute ids are fresh on each call and self-joins resolve as
+    * with [[read]]. A path that is not a plain file (a directory, a
+    * missing path) is read uncached. */
+  private def fixture(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    Try(p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p))
+      .toOption.filter(_.isFile).fold(read(spark, path)) { f =>
+        val key = (spark, path, FooterSchema.confs(spark))
+        val relation = Option(resolved.get(key))
+          .filter(r => r.length == f.getLen && r.modified == f.getModificationTime)
+          .fold {
+            val r = read(spark, path).queryExecution.analyzed.asInstanceOf[MultiInstanceRelation]
+            resolved.put(key, Resolved(f.getLen, f.getModificationTime, r))
+            r
+          }(_.relation)
+        Bridge.ofRows(spark, relation.newInstance())
+      }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = apply(s, d, "nation")
@@ -45,7 +92,7 @@ object Tables {
     * DuckDB's naive-timestamp reading of the same file.
     */
   def events(s: SparkSession, d: String): DataFrame =
-    normalizeEventTs(read(s, eventsPath(s, d)))
+    normalizeEventTs(fixture(s, eventsPath(s, d)))
 
   private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
 

@@ -32,9 +32,18 @@ object Pca {
     * doubles — the same scale posture as gramMatrix, independent of
     * corpus size. */
   def fit(embs: DataFrame, dim: Int): PcaModel = {
+    val (n, sums, gram) = moments(embs, dim)
+    require(n > 0, "pca.fit on an empty corpus")
+    modelOf(n, sums, gram, dim)
+  }
+
+  /** The moment fold of [[fit]] in one job: (n, Σv, Σv·vᵀ). An empty
+    * corpus gives n = 0 and zero sums. */
+  private def moments(embs: DataFrame,
+      dim: Int): (Long, Array[Double], Array[Double]) = {
     val s = embs.sparkSession
     import s.implicits._
-    val (n, sums, gram) = embs
+    embs
       .select(col("embedding").cast("array<float>")).as[Array[Float]]
       .mapPartitions { it =>
         var n = 0L
@@ -46,7 +55,8 @@ object Pca {
         }
         Iterator.single((n, sum, g))
       }
-      .reduce { (a, b) =>
+      .collect()
+      .foldLeft((0L, new Array[Double](dim), new Array[Double](dim * dim))) { (a, b) =>
         val (na, sa, ga) = a; val (nb, sb, gb) = b
         var i = 0
         while (i < dim) { sa(i) += sb(i); i += 1 }
@@ -54,7 +64,12 @@ object Pca {
         while (i < dim * dim) { ga(i) += gb(i); i += 1 }
         (na + nb, sa, ga)
       }
-    require(n > 0, "pca.fit on an empty corpus")
+  }
+
+  /** The model of a nonempty moment fold: covariance, Jacobi
+    * eigensystem, descending order, canonical signs. */
+  private def modelOf(n: Long, sums: Array[Double], gram: Array[Double],
+      dim: Int): PcaModel = {
     val mean = sums.map(_ / n)
     // covariance C = G/n - mean meanᵀ (symmetrize from the upper fold)
     val c = Array.ofDim[Double](dim, dim)
@@ -202,13 +217,13 @@ object Pca {
   def x48(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val dim = 64
-    val embs = Tables.embeddings(s, d)
+    val (n, sums, gram) = moments(Tables.embeddings(s, d), dim)
     // empty corpus: no model, no per-dimension rows — exactly the
     // oracle's zero GROUP BY groups (degenerate sweep); fit() itself
     // stays strict because a mean/basis from nothing is undefined
-    if (embs.isEmpty)
+    if (n == 0)
       return Seq.empty[(Int, Long, Long)].toDF("i", "mean_e4", "var_e4")
-    val model = fit(embs, dim)
+    val model = modelOf(n, sums, gram, dim)
     val rows = (0 until dim).map { i =>
       var v = 0.0
       var c = 0

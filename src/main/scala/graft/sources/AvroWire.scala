@@ -83,13 +83,13 @@ object AvroWire {
   }
 
   private[sources] def structFor(schemaJson: String): StructType =
-    new FlatAvro(schemaJson).struct
+    FlatAvro.of(schemaJson).struct
 }
 
 /** The Avro binary encoding of one flat record schema (see [[AvroWire]]
-  * for the shapes it accepts), compiled once per expression: a row is
-  * written or read field by field, in schema order, with no per-row
-  * Avro object graph.
+  * for the shapes it accepts), compiled once per schema and JVM
+  * ([[FlatAvro.of]]): a row is written or read field by field, in schema
+  * order, with no per-row Avro object graph.
   *
   *  - long and int: a zigzag varint (an int's bytes equal its long's);
   *  - string and bytes: a varint length, then the bytes — a string's
@@ -244,6 +244,13 @@ private[sources] final class FlatAvro(schemaJson: String) {
 }
 
 private[sources] object FlatAvro {
+  private val compiled = new java.util.concurrent.ConcurrentHashMap[String, FlatAvro]()
+
+  /** The codec of `schemaJson`, shared by every expression that carries
+    * it: planning copies an expression many times, and each copy would
+    * otherwise parse the schema again. A codec holds no per-call state. */
+  def of(schemaJson: String): FlatAvro = compiled.computeIfAbsent(schemaJson, new FlatAvro(_))
+
   private final val Str = 0
   private final val Lng = 1
   private final val Int32 = 2
@@ -325,7 +332,7 @@ case class AvroEncode(child: Expression, schemaJson: String,
 
   override def dataType: DataType = BinaryType
 
-  @transient private lazy val codec = new FlatAvro(schemaJson)
+  @transient private lazy val codec = FlatAvro.of(schemaJson)
   @transient private lazy val ordinals =
     codec.ordinalsIn(child.dataType.asInstanceOf[StructType])
   @transient private lazy val header: Array[Byte] = confluentId match {
@@ -352,16 +359,16 @@ case class AvroEncode(child: Expression, schemaJson: String,
   *
   * This is the detector's per-record path: every consumed record is
   * decoded twice (key and value). The struct type and the codec are
-  * built once per expression, the body is read in place (no copy to
-  * strip the header), and generated code calls [[decode]] on the
-  * child's bytes directly. Every string and bytes value is a copy, so
+  * built once per schema ([[FlatAvro.of]]), the body is read in place
+  * (no copy to strip the header), and generated code calls [[decode]]
+  * on the child's bytes directly. Every string and bytes value is a copy, so
   * the returned row shares no array with the input.
   */
 case class AvroDecode(child: Expression, schemaJson: String,
     confluentId: Option[Int])
     extends UnaryExpression {
 
-  @transient private lazy val codec = new FlatAvro(schemaJson)
+  @transient private lazy val codec = FlatAvro.of(schemaJson)
 
   override lazy val dataType: DataType = codec.struct
 

@@ -1,17 +1,23 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Spark 4 made Column a ColumnNode wrapper and gated the
   * Expression<->Column bridge behind private[sql] ExpressionUtils. This
   * object lives in the org.apache.spark.sql package solely to re-export
-  * those two conversions for graft's custom Catalyst expressions.
+  * those two conversions for graft's custom Catalyst expressions, and
+  * the private[sql] plan-to-DataFrame constructor.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A new DataFrame over `plan`, analyzed in `spark`. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Close and drop every state-store provider loaded in this executor
     * (HDFS-backed map caches, RocksDB native handles). For an ephemeral

@@ -2,15 +2,15 @@ package graft
 
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** The table-read contract of [[Tables.read]]: the schema is taken from
   * the parquet footer on the driver, so a read runs no Spark job, and the
   * result is the relation `spark.read.parquet` gives: same schema, same
-  * optimized plan, same footer choice, same errors. */
+  * optimized plan, same footer choice, same errors. A fixture table
+  * ([[Tables.apply]]) is that relation too, resolved once per session. */
 class TableReadSpec extends SparkSpec {
 
   private val sfDirs =
@@ -19,30 +19,6 @@ class TableReadSpec extends SparkSpec {
   private def fixtureTables(dir: File): Seq[String] =
     dir.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
       .map(_.stripSuffix(".parquet")).sorted.toSeq
-
-  /** Jobs this thread submits while `body` runs. The listener bus is
-    * asynchronous but in order, so once a marker job submitted after
-    * `body` has been seen, every job `body` submitted has been seen. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val tag = "graft.test.tableRead"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(tag))).foreach(seen.add)
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      val result = try body finally sc.setLocalProperty(tag, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.setLocalProperty(tag, null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains("marker"), "the marker job never reached the listener")
-      (result, seen.asScala.count(_ == "body"))
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def plan(df: DataFrame) = df.queryExecution.optimizedPlan.canonicalized
 
@@ -128,5 +104,74 @@ class TableReadSpec extends SparkSpec {
       assert(actual.getClass == expected.getClass, path)
       assert(actual.getMessage == expected.getMessage, path)
     }
+  }
+
+  private def relationOf(df: DataFrame): LogicalRelation =
+    df.queryExecution.analyzed.collectFirst { case r: LogicalRelation => r }.get
+
+  /** `<new temp dir>/<name>.parquet`, copied from the sf0.001 fixture. */
+  private def fixtureCopy(names: String*): String = {
+    val dir = tempDir("graft_tableread_fixture_")
+    names.foreach(n => Files.copy(new File(sf, s"$n.parquet").toPath,
+      new File(dir, s"$n.parquet").toPath))
+    dir.getPath
+  }
+
+  test("a second Tables.apply in a session reuses the relation, runs no job, gives fresh ids") {
+    val first = Tables(spark, sf, "orders")
+    val (second, jobs) = jobsDuring(Tables(spark, sf, "orders"))
+    assert(jobs == 0)
+    assert(relationOf(second).relation.isInstanceOf[HadoopFsRelation])
+    assert(relationOf(second).relation eq relationOf(first).relation)
+    assert(first.queryExecution.analyzed.output.map(_.exprId)
+      .intersect(second.queryExecution.analyzed.output.map(_.exprId)).isEmpty)
+  }
+
+  test("two Tables.documents reads joined on doc_id give the rows of two parquet reads") {
+    val path = s"$sf/documents.parquet"
+    def selfJoin(a: DataFrame, b: DataFrame) = {
+      val rows = a.join(b, a("doc_id") === b("doc_id"))
+        .select(a("doc_id"), a("lang"), b("source"), b("n_chars")).collect().toSeq
+      rows.map(_.toString).sorted
+    }
+    val ours = selfJoin(Tables.documents(spark, sf), Tables.documents(spark, sf))
+    assert(ours.nonEmpty)
+    assert(ours == selfJoin(spark.read.parquet(path), spark.read.parquet(path)))
+  }
+
+  test("a fixture file rewritten with another schema and length is resolved again") {
+    val dir = fixtureCopy("region")
+    val file = new File(dir, "region.parquet")
+    val before = Tables.region(spark, dir)
+    assert(before.columns.contains("r_name"))
+    val stage = tempDir("graft_tableread_stage_")
+    spark.range(5).selectExpr("id AS k", "id * 2.5 AS v").coalesce(1)
+      .write.parquet(new File(stage, "out").getPath)
+    val part = new File(stage, "out").listFiles().find(_.getName.endsWith(".parquet")).get
+    assert(part.length != file.length)
+    Files.move(part.toPath, file.toPath, StandardCopyOption.REPLACE_EXISTING)
+    val after = Tables.region(spark, dir)
+    assert(after.columns.toSeq == Seq("k", "v"))
+    assert(relationOf(after).relation ne relationOf(before).relation)
+    assert(after.count() == 5)
+  }
+
+  test("a new session resolves a fixture table on its own") {
+    val ours = Tables(spark, sf, "nation")
+    val other = spark.newSession()
+    val theirs = Tables(other, sf, "nation")
+    assert(relationOf(theirs).relation ne relationOf(ours).relation)
+    assert(relationOf(Tables(other, sf, "nation")).relation eq relationOf(theirs).relation)
+    assert(theirs.sparkSession eq other)
+    assert(theirs.collect().map(_.toString).sorted.toSeq == ours.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("after Tables.cacheAll a fixture read is served from the columnar cache") {
+    val dir = fixtureCopy("region", "nation")
+    Tables.cacheAll(spark, dir)
+    try for (name <- Seq("region", "nation")) {
+      val plan = Tables(spark, dir, name).queryExecution.optimizedPlan
+      assert(plan.collectFirst { case r: InMemoryRelation => r }.nonEmpty, name)
+    } finally Seq("region", "nation").foreach(n => Tables(spark, dir, n).unpersist(blocking = true))
   }
 }

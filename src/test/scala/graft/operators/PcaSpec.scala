@@ -85,4 +85,18 @@ class PcaSpec extends SparkSpec {
       assert(math.abs(mu) < 1e-9)
     }
   }
+
+  test("x48 folds the embeddings in one job; an empty corpus gives no rows, fit still throws") {
+    val (diag, jobs) = jobsDuring(Pca.x48(spark, sf))
+    assert(jobs == 1)
+    assert(diag.count() == 64)
+    val dir = graft.TempDirs.deleteOnExit(
+      java.nio.file.Files.createTempDirectory("graft_pca_empty_").toFile).getPath
+    graft.Tables.embeddings(spark, sf).limit(0).write.parquet(s"$dir/embeddings.parquet")
+    val (empty, emptyJobs) = jobsDuring(Pca.x48(spark, dir))
+    assert(emptyJobs == 1)
+    assert(empty.count() == 0)
+    assert(empty.columns.toSeq == Seq("i", "mean_e4", "var_e4"))
+    intercept[IllegalArgumentException](Pca.fit(graft.Tables.embeddings(spark, dir), 64))
+  }
 }
