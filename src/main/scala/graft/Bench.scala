@@ -70,7 +70,7 @@ object Bench {
     // After the attempt budget the loop proceeds anyway and the last
     // canary reading is recorded in the artifact, so a permanently busy
     // box yields a labeled-noisy artifact rather than none.
-    val canarySla = sys.env.getOrElse("SPARK_GRAFT_CANARY_SLA", "0.2").toDouble
+    val canarySla = 0.2 // seconds
     val canaryTries = sys.env.getOrElse("SPARK_GRAFT_CANARY_TRIES", "18").toInt
     var canarySec = -1.0
     var canaryAttempts = 0

@@ -127,15 +127,12 @@ object Tables {
           // per fixture dir per app) so two concurrent normalizations
           // of different dirs cannot interleave their set/restore of
           // the session flag and leak a stale value
-          val dir = TempDirs.deleteOnExit(
-            java.nio.file.Files.createTempDirectory("graft_events_norm_")
-              .toFile)
-          val out = new java.io.File(dir, "events").getAbsolutePath
-          operators.Sessions.withConfs(s, NanosKey -> "true") {
-            normalizeEventTs(read(s, raw))
-              .write.mode("overwrite").parquet(out)
-          }
-          out
+          TempDirs.derived(s, s"events-norm::$d") { dir =>
+            operators.Sessions.withConfs(s, NanosKey -> "true") {
+              normalizeEventTs(read(s, raw))
+                .write.mode("overwrite").parquet(dir.getAbsolutePath)
+            }
+          }.getAbsolutePath
         }
       })
 

@@ -1,18 +1,27 @@
 package graft
 
-/** Shared temp-directory lifecycle for the fixture-shaped caches
-  * (sentinels, event splits, dims, evolved layouts): one recursive
-  * delete implementation and one register-at-exit path instead of a
-  * copy per call site. */
+import java.io.File
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.spark.sql.SparkSession
+
+/** Every temp directory the engine makes, and the one owner of DERIVED
+  * fixtures: the layouts a query writes once per application and then
+  * reads (the replay batches and event splits, q24's partitioned
+  * orders, q33's status dim, q34's evolved orders, q36's split fact and
+  * dim, the normalized events copy) all come from [[derived]]. Their
+  * root is `java.io.tmpdir`: a bench run points it into its own work
+  * dir, so a run writes only inside its checkout. The scratch that
+  * replays churn through (checkpoints, state, kept outputs) goes to
+  * [[scratchDir]] instead. */
 private[graft] object TempDirs {
 
-  def deleteRecursively(f: java.io.File): Unit = {
+  def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
   }
 
   /** Register `dir` for recursive deletion at JVM exit and return it. */
-  def deleteOnExit(dir: java.io.File): java.io.File = {
+  def deleteOnExit(dir: File): File = {
     Runtime.getRuntime.addShutdownHook(
       new Thread(() => deleteRecursively(dir)))
     dir
@@ -26,17 +35,40 @@ private[graft] object TempDirs {
   /** Where the per-process scratch dir goes: `shm` when it is a
     * writable directory with at least [[MinShmUsableBytes]] free, else
     * `java.io.tmpdir`. */
-  private[graft] def scratchRoot(shm: java.io.File): java.io.File =
+  private[graft] def scratchRoot(shm: File): File =
     if (shm.isDirectory && shm.canWrite && shm.getUsableSpace >= MinShmUsableBytes) shm
-    else new java.io.File(System.getProperty("java.io.tmpdir"))
+    else jvmTmp
+
+  private def jvmTmp: File = new File(System.getProperty("java.io.tmpdir"))
+
+  /** Every derived-fixture dir, one per (application, key). */
+  private val derivedDirs = new ConcurrentHashMap[String, File]()
+
+  /** The derived fixture for `key` in `s`'s application: a new dir
+    * under `java.io.tmpdir`, filled by `build` on first use, removed at
+    * JVM exit. Built OUTSIDE the map (no computeIfAbsent): a build is a
+    * Spark write job and must not stall other callers behind a bin
+    * lock. Each racing builder writes its own fresh dir, so a losing
+    * duplicate never interleaves files with the winner; `putIfAbsent`
+    * keeps one, and the loser's is reaped at exit. A build that throws
+    * caches nothing. */
+  def derived(s: SparkSession, key: String)(build: File => Unit): File = {
+    val k = s.sparkContext.applicationId + "::" + key
+    Option(derivedDirs.get(k)).getOrElse {
+      val dir = deleteOnExit(java.nio.file.Files
+        .createTempDirectory(jvmTmp.toPath, "graft_fixture_").toFile)
+      build(dir)
+      Option(derivedDirs.putIfAbsent(k, dir)).getOrElse(dir)
+    }
+  }
 
   /** A new directory under `root`, named for this process and removed
     * at JVM exit. */
-  private[graft] def processDir(root: java.io.File): java.io.File =
+  private[graft] def processDir(root: File): File =
     deleteOnExit(java.nio.file.Files.createTempDirectory(root.toPath,
       s"graft-local-${ProcessHandle.current.pid}-").toFile)
 
-  private val Shm = new java.io.File("/dev/shm")
+  private val Shm = new File("/dev/shm")
 
   private lazy val processLocalDir: String =
     processDir(scratchRoot(Shm)).getAbsolutePath
@@ -49,9 +81,8 @@ private[graft] object TempDirs {
     * replays also read+rewrite their bucketed state through it every
     * micro-batch). Production deployments choose durable
     * checkpointLocation / state URIs — this shortcut is the HARNESS's,
-    * shared by the checkpoint, replay-state, replay-fixture and
-    * replay-output paths. */
-  def scratchDir(prefix: String): java.io.File =
+    * shared by the checkpoint, replay-state and replay-output paths. */
+  def scratchDir(prefix: String): File =
     java.nio.file.Files.createTempDirectory(scratchRoot(Shm).toPath, prefix).toFile
 
   /** Scratch root for `spark.local.dir` (shuffle files, spills, block

@@ -230,18 +230,15 @@ object AsOf {
   }
 
   /** The fused single-window self-ASOF form (the gated plan). AQE is
-    * pinned OFF (isolated session clone, the
-    * [[Sessions.cloneWithRuntimeConfs]] conf-window pattern): the
-    * plan is a single hash exchange feeding a window, and AQE's only
-    * lever on that shape is bytes-based partition coalescing — which
-    * folds the CPU-bound per-key sort into a handful of tasks
+    * pinned OFF (a [[Sessions.pinned]] clone): the plan is a single
+    * hash exchange feeding a window, and AQE's only lever on that shape
+    * is bytes-based partition coalescing — which folds the CPU-bound
+    * per-key sort into a handful of tasks
     * (measured: the 10× window collapsed to one ~20 MB partition,
     * 2.4× slower), while AQE's actual value (join re-plans, skew
     * splits) has no join to act on and cannot split a window
     * exchange. */
   def x14Window(s: SparkSession, d: String): DataFrame = {
-    val ss = Sessions.cachedCloneWithRuntimeConfs(s, "x14-window")
-    ss.conf.set("spark.sql.adaptive.enabled", "false")
     // With AQE pinned off, the window's one exchange would inherit the
     // session's static (core-count) partition count — 32 near-empty
     // sorts under a ~2 MB input at bench scale (r14 scaling table: the
@@ -257,8 +254,9 @@ object AsOf {
       s.sparkContext.applicationId + "::" + d,
       _ => graft.Tables.bytesScaledPartitions(
         graft.Tables.events(s, d), 256L << 10))
-    ss.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    x14WindowPlan(ss, d)
+    x14WindowPlan(Sessions.pinned(s, "x14-window",
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> parts.toString), d)
   }
 
   private val x14PartsCache =

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import graft.sources.ParquetStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -54,11 +54,11 @@ object Bucketed {
     * re-runs) pay it once and measure the join, exactly the production
     * read pattern. Table names are suffixed per source dir so scale
     * factors never cross-contaminate. The write block is synchronized
-    * (TrieMap.getOrElseUpdate does not make a side-effecting builder
-    * atomic; two threads would race the DROP/delete/save sequence on
-    * identical names); SEPARATE drivers sharing one warehouse still
-    * must not run this concurrently — same single-writer caveat as
-    * every plain-parquet path in [[graft.sources.ParquetStore]]. */
+    * (a `mutable.Map` is not thread-safe, and two threads would race
+    * the DROP/delete/save sequence on identical names); SEPARATE
+    * drivers sharing one warehouse still must not run this concurrently
+    * — same single-writer caveat as every plain-parquet path in
+    * [[graft.sources.ParquetStore]]. */
   private val written = scala.collection.mutable.Map[String, (String, String)]()
 
   private def bucketedTables(s: SparkSession, d: String): (DataFrame, DataFrame) = {
@@ -97,32 +97,18 @@ object Bucketed {
       |FROM customer JOIN orders ON c_custkey = o_custkey
       |GROUP BY c_mktsegment""".stripMargin
 
-  /** One partitioned layout per (session, source dir), mirroring
-    * [[bucketedTables]]' amortization — including its synchronization:
-    * TrieMap.getOrElseUpdate does not make the side-effecting
-    * writePartitioned atomic, and two concurrent q24 calls would race
-    * SaveMode.Overwrite's delete-and-write on the same directory. */
-  private val writtenPart = scala.collection.mutable.Map[String, String]()
-
-  /** Orders laid out as o_orderstatus=X directories under /tmp. The
-    * read-back pins the writer's schema explicitly: a partitioned
-    * layout of an EMPTY relation has no `status=X` directories to
-    * infer from (degenerate-corpus sweep), and at scale an explicit
-    * schema also skips the footer-sampling inference pass. */
+  /** Orders laid out as o_orderstatus=X directories, once per (app,
+    * source dir). The read-back pins the writer's schema explicitly: a
+    * partitioned layout of an EMPTY relation has no `status=X`
+    * directories to infer from (degenerate-corpus sweep), and at scale
+    * an explicit schema also skips the footer-sampling inference pass. */
   private[graft] def partitionedOrders(s: SparkSession, d: String): DataFrame = {
     val src = Tables.orders(s, d).select("o_orderkey", "o_custkey",
       "o_orderpriority", "o_orderstatus")
-    val path = writtenPart.synchronized {
-      writtenPart.getOrElseUpdate(
-        s"${s.sparkContext.applicationId}/$d", {
-          val suffix = java.lang.Long.toHexString(
-            scala.util.hashing.MurmurHash3.stringHash(d).toLong & 0xffffffffL)
-          val p = s"${System.getProperty("java.io.tmpdir")}/graft_q24_$suffix"
-          ParquetStore.writePartitioned(src, p, "o_orderstatus")
-          p
-        })
+    val dir = TempDirs.derived(s, s"q24::$d") { dir =>
+      ParquetStore.writePartitioned(src, dir.getAbsolutePath, "o_orderstatus")
     }
-    s.read.schema(src.schema).parquet(path)
+    s.read.schema(src.schema).parquet(dir.getAbsolutePath)
   }
 
   /** The pruned scan q24 aggregates — exposed for PlanSpec to assert
@@ -152,26 +138,13 @@ object Bucketed {
     * one BEFORE the PartitionPruning rule runs — the selective filter
     * disappears from the plan and DPP never fires. A file-backed dim is
     * also the honest shape: at scale dimensions live in storage. */
-  private val dimPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def statusDim(s: SparkSession): DataFrame = {
     import s.implicits._
-    // build OUTSIDE any lock: the write is a Spark job and must not
-    // serialize unrelated concurrent callers behind it. Two racing
-    // first-callers may both build; putIfAbsent picks one winner and
-    // the loser's dir is just an extra JVM-exit cleanup entry.
-    val key = s.sparkContext.applicationId
-    val p = Option(dimPath.get(key)).getOrElse {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_statusdim_").toFile
+    Tables.read(s, TempDirs.derived(s, "q33-dim") { dir =>
       Seq(("F", "closed"), ("O", "open"), ("P", "pending"))
         .toDF("status", "phase")
         .coalesce(1).write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
-      Option(dimPath.putIfAbsent(key, built)).getOrElse(built)
-    }
-    Tables.read(s, p)
+    }.getAbsolutePath)
   }
 
   /** q33 — DYNAMIC partition pruning: the filter is on the dimension's
@@ -207,17 +180,8 @@ object Bucketed {
     * footer schemas — the normal state of any long-lived ingestion
     * path. Split parity on the unique key so both generations exist at
     * every scale factor. */
-  private val evolPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def evolvedOrders(s: SparkSession, d: String): DataFrame = {
-    // same build-outside-lock + putIfAbsent discipline as statusDim:
-    // each racing builder writes its own fresh temp dir, so a losing
-    // duplicate can never interleave files with the winner
-    val key = s"${s.sparkContext.applicationId}/$d"
-    val p = Option(evolPath.get(key)).getOrElse {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_evolve_").toFile
+    val dir = TempDirs.derived(s, s"q34::$d") { dir =>
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -225,15 +189,13 @@ object Bucketed {
       o.filter(col("o_orderkey") % 2 === 1)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.mode("append").parquet(dir.getAbsolutePath)
-      val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
-      Option(evolPath.putIfAbsent(key, built)).getOrElse(built)
     }
     // mergeSchema reconciles the two footer generations into the union
     // schema; old-generation rows read the missing column as NULL. The
     // per-file footer merge is a planning-time cost proportional to
     // file count, not data — the schema-drift answer for a path whose
     // writers upgraded mid-stream.
-    s.read.option("mergeSchema", "true").parquet(p)
+    s.read.option("mergeSchema", "true").parquet(dir.getAbsolutePath)
   }
 
   /** q34 — schema-evolution read: aggregate over the merged relation;
@@ -261,19 +223,12 @@ object Bucketed {
     * fixture scale they must be widened or the rule (correctly) judges
     * the scan too small to bother. The conf window must cover
     * OPTIMIZATION, not just construction, which is why [[q35]]
-    * materializes inside it. The pins live on a CLONED session
-    * (`newSession`: same SparkContext and warehouse, isolated SQLConf),
-    * handed to `f` — a concurrent query planned on the parent session
-    * during the window keeps its broadcast joins; nothing global is
-    * mutated, so no restore is needed. Builder-time `spark.sql.*`
-    * settings (shuffle partitions etc.) live in the SparkConf and so
-    * carry over to the clone. */
-  private[graft] def withBloomConfs[T](s: SparkSession)(f: SparkSession => T): T = {
-    // clone carries the parent's RUNTIME conf deltas too (a bare
-    // newSession inherits only builder-time SparkConf settings — a
-    // harness-applied runtime override would silently vanish here)
-    val ss = Sessions.cachedCloneWithRuntimeConfs(s, "runtime-bloom")
-    val pins = Seq(
+    * materializes inside it. The pins live on a [[Sessions.pinned]]
+    * clone handed to `f` — a concurrent query planned on the parent
+    * session during the window keeps its broadcast joins; nothing
+    * global is mutated, so no restore is needed. */
+  private[graft] def withBloomConfs[T](s: SparkSession)(f: SparkSession => T): T =
+    f(Sessions.pinned(s, "runtime-bloom",
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "64MB",
@@ -281,10 +236,7 @@ object Bucketed {
       // (hints are only consulted for broadcast): at fixture scale both
       // sides fit the broadcast threshold, so model the target scale —
       // where neither side broadcasts — explicitly
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    pins.foreach { case (k, v) => ss.conf.set(k, v) }
-    f(ss)
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
   /** The join q35 gates: big fact (lineitem) ⋈ selectively-filtered
     * orders. The merge hint pins the shuffle-join shape the technique

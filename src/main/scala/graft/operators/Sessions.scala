@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Conf windows: the cloned-session helper for conf-window operators
-  * (q35's bloom pins, q36's AQE skew pins), and [[withConfs]] for
-  * windows set on the caller's own session (the streaming replays, the
-  * events-fixture normalization). */
+/** Conf windows: [[pinned]], the cloned session of the conf-window
+  * operators (q35's bloom pins, q36's AQE skew pins, x14's AQE-off
+  * window), and [[withConfs]] for windows set on the caller's own
+  * session (the streaming replays, the events-fixture normalization). */
 object Sessions {
 
   /** Run `f` with each `key -> value` set on `s`, then put every key
@@ -22,25 +22,6 @@ object Sessions {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
     }
-  }
-
-  /** `s.newSession()` plus the parent's RUNTIME SQLConf deltas.
-    *
-    * A bare `newSession()` inherits only builder-time (SparkConf)
-    * settings; anything set via `s.conf.set(...)` at runtime — a
-    * harness-applied shuffle-partition override, a timezone pin — would
-    * be silently dropped inside the conf window, unlike the old
-    * set/restore formulation which preserved them. Copying the parent's
-    * conf map restores that behavior while keeping the window's
-    * isolation (pins applied on the clone never leak to the parent).
-    *
-    * Static SQL confs (warehouse dir, extensions) cannot be set on a
-    * live session; they are identical on the clone by construction
-    * (same SparkContext), so the copy skips them. */
-  private[graft] def cloneWithRuntimeConfs(s: SparkSession): SparkSession = {
-    val ss = s.newSession()
-    syncConfs(s, ss)
-    ss
   }
 
   /** Copy the parent's runtime conf deltas onto the clone, and CLEAR
@@ -74,29 +55,42 @@ object Sessions {
     }
   }
 
-  /** CACHED conf-window clone, keyed by (parent session, purpose).
-    *
-    * `newSession()` is not cheap when a query pays it per CALL: the
-    * clone's SessionState (analyzer, optimizer, catalog, data-source
-    * resolution caches) initializes from scratch and the first query
-    * on it re-lists and re-infers every parquet relation — measured
-    * ~1.1 s of the conf-window queries' per-run cost (q35/q36 build
-    * phase, Bench trace). A conf window applies THE SAME pins on
-    * every call, so the clone is reusable: reuse re-syncs the
-    * parent's runtime conf deltas (a few hundred string compares,
-    * ~ms) and the caller re-applies its pins on top, exactly as it
-    * did on the fresh clone. Single-writer discipline matches the
-    * call sites (harness queries run sequentially); the cache is
-    * per-application and bounded by the number of distinct purposes. */
   private val cloneCache =
     new java.util.concurrent.ConcurrentHashMap[String, SparkSession]()
 
-  private[graft] def cachedCloneWithRuntimeConfs(
-      s: SparkSession, purpose: String): SparkSession = {
+  /** A conf-window session: `s`'s cached clone for `purpose` with the
+    * parent's RUNTIME SQLConf deltas and then `pins` set on it.
+    *
+    * A bare `newSession()` (same SparkContext and warehouse, isolated
+    * SQLConf) inherits only builder-time (SparkConf) settings; anything
+    * set via `s.conf.set(...)` at runtime — a harness-applied
+    * shuffle-partition override, a timezone pin — would be silently
+    * dropped inside the conf window. Copying the parent's conf map keeps
+    * them while keeping the window's isolation: a pin set on the clone
+    * never reaches the parent. Static SQL confs (warehouse dir,
+    * extensions) cannot be set on a live session; they are identical on
+    * the clone by construction (same SparkContext), so the copy skips
+    * them.
+    *
+    * The clone is CACHED, keyed by (parent session, purpose):
+    * `newSession()` is not cheap when a query pays it per CALL — the
+    * clone's SessionState (analyzer, optimizer, catalog, data-source
+    * resolution caches) initializes from scratch and the first query on
+    * it re-lists and re-infers every parquet relation, measured ~1.1 s
+    * of the conf-window queries' per-run cost (q35/q36 build phase,
+    * Bench trace). Reuse re-syncs the parent's runtime conf deltas (a
+    * few hundred string compares, ~ms), which also clears a key the
+    * previous use pinned, and sets `pins` on top. Single-writer
+    * discipline matches the call sites (harness queries run
+    * sequentially); the cache is per-application and bounded by the
+    * number of distinct purposes. */
+  private[graft] def pinned(s: SparkSession, purpose: String,
+      pins: (String, String)*): SparkSession = {
     val key = s.sparkContext.applicationId + "::" +
       System.identityHashCode(s) + "::" + purpose
     val ss = cloneCache.computeIfAbsent(key, _ => s.newSession())
     syncConfs(s, ss)
+    pins.foreach { case (k, v) => ss.conf.set(k, v) }
     ss
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Tables, TempDirs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -75,17 +75,9 @@ object Skew {
     * every scan of it is one map task, so there is no boundary to split
     * at and OptimizeSkewedJoin (correctly) reports nothing splittable.
     * A production fact table arrives as thousands of files/row groups;
-    * the 8-file copy restores that property at fixture scale. Same
-    * one-time-layout amortization and build-outside-lock discipline as
-    * [[Bucketed.partitionedOrders]]. */
-  private val splitPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def splitFact(s: SparkSession, d: String): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}/$d"
-    val p = Option(splitPath.get(key)).getOrElse {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q36_split_").toFile
+    * the 8-file copy restores that property at fixture scale. */
+  private def splitFact(s: SparkSession, d: String): DataFrame =
+    Tables.read(s, TempDirs.derived(s, s"q36-fact::$d") { dir =>
       // the md5 payload keeps the hot partition's shuffle BYTES skewed
       // at every scale factor: without it the hot key's rows are
       // (constant, small-int double) and lz4 flattens the 5x row skew
@@ -98,11 +90,7 @@ object Skew {
             .as("payload"))
         .repartition(8)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
-      Option(splitPath.putIfAbsent(key, built)).getOrElse(built)
-    }
-    Tables.read(s, p)
-  }
+    }.getAbsolutePath)
 
   /** The 25-row aggregated customer dim, materialized to parquet once
     * per (app, dir). Materialized — not left as an inline Aggregate —
@@ -112,24 +100,14 @@ object Skew {
     * plans to, the agg shuffle doubling as the join shuffle) hides the
     * stage and the rule skips the join. A real deployment's dim is a
     * stored table, which is exactly this. */
-  private val dimSplitPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def custDim(s: SparkSession, d: String): DataFrame = {
-    val key = s"${s.sparkContext.applicationId}/$d"
-    val p = Option(dimSplitPath.get(key)).getOrElse {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_q36_dim_").toFile
+  private def custDim(s: SparkSession, d: String): DataFrame =
+    Tables.read(s, TempDirs.derived(s, s"q36-dim::$d") { dir =>
       Tables.customer(s, d)
         .groupBy((col("c_custkey") % 25).as("k"))
         .agg(count(lit(1)).as("n_cust"))
         .coalesce(1)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)
-      val built = graft.TempDirs.deleteOnExit(dir).getAbsolutePath
-      Option(dimSplitPath.putIfAbsent(key, built)).getOrElse(built)
-    }
-    Tables.read(s, p)
-  }
+    }.getAbsolutePath)
 
   /** Confs under which AQE's OptimizeSkewedJoin fires at fixture scale,
     * restored after `f`. The thresholds exist so tiny skews aren't
@@ -142,23 +120,17 @@ object Skew {
     * [[Bucketed.withBloomConfs]]. The window must cover EXECUTION (AQE
     * reads these while re-optimizing between stages), which is why
     * [[q36]] materializes inside it. As with [[Bucketed.withBloomConfs]]
-    * the pins live on a CLONED session handed to `f`, so a concurrent
-    * query on the parent session never inherits the tiny skew
-    * thresholds or the disabled broadcast. */
-  private[graft] def withAqeSkewConfs[T](s: SparkSession)(f: SparkSession => T): T = {
-    // runtime conf deltas carried onto the clone — see
-    // [[Sessions.cloneWithRuntimeConfs]]
-    val ss = Sessions.cachedCloneWithRuntimeConfs(s, "aqe-skew")
-    val pins = Seq(
+    * the pins live on a [[Sessions.pinned]] clone handed to `f`, so a
+    * concurrent query on the parent session never inherits the tiny
+    * skew thresholds or the disabled broadcast. */
+  private[graft] def withAqeSkewConfs[T](s: SparkSession)(f: SparkSession => T): T =
+    f(Sessions.pinned(s, "aqe-skew",
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    pins.foreach { case (k, v) => ss.conf.set(k, v) }
-    f(ss)
-  }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
   /** The join q36 gates: the hot-keyed fact (half the rows on key 0)
     * against a 25-row aggregated customer dim, neither side

@@ -4,7 +4,6 @@ import graft.TempDirs
 import graft.streaming._
 import java.io.File
 import java.nio.file.Files
-import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -94,33 +93,17 @@ object StreamingQueries {
     replayStream(s, dir, 1, Some(MessageStatusSchema)).as[MessageStatus]
   }
 
-  /** Every replay fixture dir, one per (application, key), removed at
-    * JVM exit. Built OUTSIDE the map (no computeIfAbsent): a build is a
-    * Spark write job and must not stall other cache users behind a bin
-    * lock; a racing duplicate build is a spare temp dir reaped at JVM
-    * exit. */
-  private val fixtures = new ConcurrentHashMap[String, File]()
-
-  private def cachedFixture(s: SparkSession, key: String)(build: File => Unit): File = {
-    val k = s.sparkContext.applicationId + "::" + key
-    Option(fixtures.get(k)).getOrElse {
-      val dir = TempDirs.deleteOnExit(TempDirs.scratchDir("graft_fixture_"))
-      build(dir)
-      Option(fixtures.putIfAbsent(k, dir)).getOrElse(dir)
-    }
-  }
-
-  /** The replay fixture for `key`, built on first use: batch i is
-    * written as ONE parquet file, named in batch order with strictly
-    * ascending mtimes, so a `maxFilesPerTrigger = 1` source
-    * ([[replayStream]]) delivers file i as micro-batch i. A replay thus
-    * pins which micro-batch every row rides — the invariant that lets a
-    * batch twin serve as its oracle. An empty batch still yields its
-    * (row-less) file, so the degenerate sweep replays the same number
-    * of batches. */
+  /** The replay fixture for `key`, built on first use by
+    * [[TempDirs.derived]]: batch i is written as ONE parquet file,
+    * named in batch order with strictly ascending mtimes, so a
+    * `maxFilesPerTrigger = 1` source ([[replayStream]]) delivers file
+    * i as micro-batch i. A replay thus pins which micro-batch every row
+    * rides — the invariant that lets a batch twin serve as its oracle.
+    * An empty batch still yields its (row-less) file, so the degenerate
+    * sweep replays the same number of batches. */
   private[graft] def replayFixture(s: SparkSession, key: String)(
       batches: => Seq[DataFrame]): File =
-    cachedFixture(s, key) { dir =>
+    TempDirs.derived(s, key) { dir =>
       val t0 = System.currentTimeMillis()
       batches.zipWithIndex.foreach { case (df, i) =>
         val stage = new File(dir, s"stage$i")
@@ -577,7 +560,7 @@ object StreamingQueries {
     * REAL multi-batch input with overlapping keys — the shape an
     * incremental sink must actually handle. */
   private def eventsSplitDir(s: SparkSession, d: String, nFiles: Int): File =
-    cachedFixture(s, s"split::$d::$nFiles") { dir =>
+    TempDirs.derived(s, s"split::$d::$nFiles") { dir =>
       graft.Tables.read(s, graft.Tables.eventsPath(s, d)).repartition(nFiles)
         .write.mode("overwrite").parquet(dir.getAbsolutePath)
     }

@@ -2,12 +2,11 @@ package graft
 
 import java.io.File
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Where Spark's scratch directory goes: Spark's own `SPARK_LOCAL_DIRS`
   * when set, else a per-process directory on tmpfs when tmpfs has room,
-  * else under the JVM temp dir. */
-class TempDirsSpec extends AnyFunSuite {
+  * else under the JVM temp dir. And the derived-fixture builder: one
+  * dir per (application, key) under the JVM temp dir, built once. */
+class TempDirsSpec extends SparkSpec {
 
   private val tmpdir = new File(System.getProperty("java.io.tmpdir"))
 
@@ -45,5 +44,49 @@ class TempDirsSpec extends AnyFunSuite {
     assert(TempDirs.localDirFor(Some("/a,/b"),
       fail("the per-process dir was made although SPARK_LOCAL_DIRS is set")) == "/a,/b")
     assert(TempDirs.localDirFor(None, "/fallback") == "/fallback")
+  }
+
+  private def uniqueKey(tag: String): String =
+    s"spec-$tag-" + java.util.UUID.randomUUID()
+
+  test("derived: the same (app, key) returns the same dir without rebuilding; another key another dir") {
+    val key = uniqueKey("same")
+    var builds = 0
+    def build(dir: File): Unit = { builds += 1; new File(dir, "built").createNewFile() }
+    val a = TempDirs.derived(spark, key)(build)
+    val b = TempDirs.derived(spark, key)(build)
+    assert(a == b)
+    assert(builds == 1, "a cache hit rebuilt the fixture")
+    assert(new File(a, "built").isFile)
+    val c = TempDirs.derived(spark, uniqueKey("other"))(build)
+    assert(c != a)
+    assert(builds == 2)
+  }
+
+  test("derived dirs lie under java.io.tmpdir") {
+    val dir = TempDirs.derived(spark, uniqueKey("root"))(_ => ())
+    assert(dir.isDirectory)
+    assert(dir.getCanonicalFile.getParentFile == tmpdir.getCanonicalFile)
+  }
+
+  test("a derived build that throws caches nothing, so the next call builds") {
+    val key = uniqueKey("throw")
+    intercept[IllegalStateException] {
+      TempDirs.derived(spark, key)(_ => throw new IllegalStateException("build failed"))
+    }
+    var built = false
+    TempDirs.derived(spark, key)(_ => built = true)
+    assert(built, "the failed build was cached")
+  }
+
+  test("q24 reads its partitioned orders from the dir the builder holds for its key") {
+    val files = operators.Bucketed.prunedScan(spark, sf).inputFiles.toSeq
+    val dir = TempDirs.derived(spark, s"q24::$sf")(_ =>
+      fail("q24's layout was not built through TempDirs.derived")).getCanonicalPath
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val path = new File(new java.net.URI(f).getPath).getCanonicalPath
+      assert(path.startsWith(dir + File.separator), s"$path lies outside $dir")
+    }
   }
 }

@@ -105,4 +105,23 @@ class ReplayFixtureSpec extends SparkSpec {
       check()
     } finally spark.conf.unset(preset)
   }
+
+  test("pinned carries the parent's runtime confs, keeps its pins off the parent, and drops a pin its next use does not set") {
+    val carried = "spark.sql.streaming.stateStore.minDeltasForSnapshot"
+    val pin = "spark.sql.streaming.stateStore.compression.codec"
+    val purpose = uniqueKey("pinned")
+    spark.conf.set(carried, "7")
+    spark.conf.unset(pin)
+    try {
+      val ss = Sessions.pinned(spark, purpose, pin -> "zstd")
+      assert(ss ne spark)
+      assert(ss.conf.get(carried) == "7")
+      assert(ss.conf.get(pin) == "zstd")
+      assert(!spark.conf.getAll.contains(pin), "a pin reached the parent")
+      val next = Sessions.pinned(spark, purpose)
+      assert(next eq ss, "the clone of one purpose was not reused")
+      assert(!next.conf.getAll.contains(pin), "a pin of the previous use survived")
+      assert(next.conf.get(carried) == "7")
+    } finally spark.conf.unset(carried)
+  }
 }
